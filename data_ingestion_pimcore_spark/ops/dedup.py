@@ -241,7 +241,8 @@ def minhash_signatures(d: DataFrame) -> DataFrame:
             sig_rows = []
             for cell in col:
                 if pre_shingled:
-                    grams = cell
+                    # a NULL array hashes nothing: all-null signature
+                    grams = cell if cell is not None else []
                 elif cell is None:
                     grams = [None]
                 else:

@@ -1733,6 +1733,7 @@ SELECT TRUE AS chunks_equal, TRUE AS order_equal, TRUE AS records_equal,
     "Bounded work: one small-table ingest per protocol.",
 )
 def ingest_pipelined_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
     import tempfile
 
     from ..config import IngestRequest
@@ -1750,8 +1751,12 @@ def ingest_pipelined_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def run(validator):
-        state = IngestionStateStore(tempfile.mktemp(suffix=".parquet"))
-        s = ingest(spark, req, src, state, validator)
+        state_dir = tempfile.mkdtemp(prefix="parity_state_")
+        try:
+            state = IngestionStateStore(f"{state_dir}/state.parquet")
+            s = ingest(spark, req, src, state, validator)
+        finally:
+            shutil.rmtree(state_dir, ignore_errors=True)
         assert s.status == "COMPLETED", s
         return s
 

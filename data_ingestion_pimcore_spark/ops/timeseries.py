@@ -242,6 +242,32 @@ _STREAM_STATE_PARTITIONS = "8"
 _SHM_REPLAY_LIMIT_BYTES = 1 << 30
 
 
+def _replay_tmp_root(events_path: str) -> str | None:
+    """``/dev/shm`` when the events input at ``events_path`` (a single
+    parquet file or a dataset directory) fits the tmpfs gate, else None
+    (default disk tmp). A missing path or an unreadable entry counts as
+    over the limit: an unknown size must not land on RAM."""
+    import os
+
+    def _raise(err: OSError) -> None:
+        raise err
+
+    try:
+        if os.path.isdir(events_path):
+            events_bytes = 0
+            for dirpath, _dirs, files in os.walk(events_path, onerror=_raise):
+                events_bytes += sum(
+                    os.path.getsize(os.path.join(dirpath, f)) for f in files
+                )
+        else:
+            events_bytes = os.path.getsize(events_path)  # raises if missing
+    except OSError:
+        return None
+    if os.path.isdir("/dev/shm") and events_bytes <= _SHM_REPLAY_LIMIT_BYTES:
+        return "/dev/shm"
+    return None
+
+
 def _drain(spark: SparkSession, df: DataFrame, prefix: str, mode: str) -> str:
     """Run a streaming DataFrame to completion (AvailableNow) into a
     memory sink; returns the sink table name. Pins shuffle/state
@@ -1291,19 +1317,8 @@ def ts_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     # RAM-backed scratch must not grow with the corpus. The gate costs
     # nothing locally (the r12 scratch-medium sweep measured the medium
     # flat at bench sizes); above it everything rides default disk tmp.
-    events_bytes = 0
-    try:
-        ev_root = os.path.join(sf_dir.rstrip("/"), "events.parquet")
-        for dirpath, _dirs, files in os.walk(ev_root):
-            events_bytes += sum(
-                os.path.getsize(os.path.join(dirpath, f)) for f in files
-            )
-    except OSError:
-        events_bytes = _SHM_REPLAY_LIMIT_BYTES + 1  # unknown size: stay off RAM
-    tmp_root = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and events_bytes <= _SHM_REPLAY_LIMIT_BYTES
-        else None
+    tmp_root = _replay_tmp_root(
+        os.path.join(sf_dir.rstrip("/"), "events.parquet")
     )
     root = tempfile.mkdtemp(prefix="fb_upsert_", dir=tmp_root)
     src = os.path.join(root, "events")

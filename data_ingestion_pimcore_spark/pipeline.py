@@ -942,14 +942,14 @@ def warm_ingest(
         re_ingestion=True,
         order_cols=("k", "v"),
     )
-    for req in (count_req, byte_req):
-        state = IngestionStateStore(tempfile.mktemp(suffix=".parquet"))
-        ingest(spark, req, df, state, ChunkValidator())
-    if like is None:
-        return
-    mini_dir = tempfile.mkdtemp(prefix="warm_like_")
-    mini_path = f"{mini_dir}/slice.parquet"
+    tmp_dir = tempfile.mkdtemp(prefix="warm_ingest_")
     try:
+        for i, req in enumerate((count_req, byte_req)):
+            state = IngestionStateStore(f"{tmp_dir}/state_{i}.parquet")
+            ingest(spark, req, df, state, ChunkValidator())
+        if like is None:
+            return
+        mini_path = f"{tmp_dir}/slice.parquet"
         like.limit(like_rows).write.mode("overwrite").parquet(mini_path)
         like_req = IngestRequest(
             file_path=mini_path,
@@ -962,8 +962,8 @@ def warm_ingest(
             spark,
             like_req,
             spark.read.parquet(mini_path),
-            IngestionStateStore(tempfile.mktemp(suffix=".parquet")),
+            IngestionStateStore(f"{tmp_dir}/state_like.parquet"),
             ChunkValidator(),
         )
     finally:
-        shutil.rmtree(mini_dir, ignore_errors=True)
+        shutil.rmtree(tmp_dir, ignore_errors=True)

@@ -54,14 +54,24 @@ def spread(df: DataFrame) -> DataFrame:
 
     A small parquet table arrives as a handful of file splits (often
     one), so expensive per-row expressions (shingling, per-doc O(L²)
-    gates, hash fans) would run at the scan's task count — serializing
-    on one core while 31 idle. When the input has materially fewer
-    partitions than the session's shuffle parallelism, pay one cheap
-    round-robin shuffle of the raw rows to unlock the cores. At real
-    scale the scan has plenty of splits and this is a no-op — the
-    condition, not the repartition, is the point.
+    gates, hash fans, Arrow Python stages) would run at the scan's task
+    count — serializing on one core while the rest idle. When the input
+    has materially fewer partitions than the target, pay one cheap
+    round-robin shuffle of the raw rows to unlock the cores.
+
+    The target is the session's task slots (``defaultParallelism``),
+    capped by ``spark.sql.shuffle.partitions``. Each Arrow Python task
+    carries a fixed runner cost (~0.25 core-s, data-independent), and
+    AQE never coalesces an explicit ``repartition(n)``, so splitting a
+    small input into more tasks than slots only adds waves of that
+    fixed cost. At real scale the scan has plenty of splits and this is
+    a no-op — the condition, not the repartition, is the point.
     """
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    spark = df.sparkSession
+    target = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df

@@ -74,6 +74,30 @@ def test_minhash_estimates_track_jaccard(spark):
             assert found.get(key) == 1.0
 
 
+def test_minhash_null_shingles_give_all_null_signature(spark):
+    """A NULL pre-built shingle array hashes nothing, exactly like an
+    empty one: every signature slot is NULL and each band hashes the
+    empty string."""
+    from hashlib import md5
+
+    from data_ingestion_pimcore_spark.ops.dedup import (
+        N_BANDS,
+        N_HASHES,
+        minhash_signatures,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, []), (3, ["a b c"])], "doc_id long, shingles array<string>"
+    )
+    by_id = {r["doc_id"]: r for r in minhash_signatures(docs).collect()}
+    empty_band = md5(b"").hexdigest()[:16]
+    for doc in (1, 2):
+        r = by_id[doc]
+        assert all(r[f"sig_{i}"] is None for i in range(N_HASHES))
+        assert all(r[f"band_{b}"] == empty_band for b in range(N_BANDS))
+    assert all(by_id[3][f"sig_{i}"] is not None for i in range(N_HASHES))
+
+
 def _minhash_pairs_for(corpus):
     """dedup_minhash_pairs over an arbitrary DataFrame (not the table)."""
     from pyspark.sql import functions as F

@@ -367,3 +367,30 @@ def test_stream_exactly_once_sink_matches_batch(spark):
         .collect()
     )
     assert got == want and len(got) > 0
+
+
+def test_foreachbatch_replay_tmpfs_gate_sizes_every_layout(tmp_path, monkeypatch):
+    """The replay-dir tmpfs gate must size a single-file events.parquet
+    as well as a dataset directory, and keep a missing input off RAM."""
+    import os
+
+    from data_ingestion_pimcore_spark.ops import timeseries
+
+    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    monkeypatch.setattr(timeseries, "_SHM_REPLAY_LIMIT_BYTES", 100)
+
+    single = tmp_path / "single" / "events.parquet"
+    single.parent.mkdir()
+    single.write_bytes(b"x" * 101)
+    assert timeseries._replay_tmp_root(str(single)) is None
+    single.write_bytes(b"x" * 100)
+    assert timeseries._replay_tmp_root(str(single)) == shm
+
+    dataset = tmp_path / "dataset" / "events.parquet"
+    dataset.mkdir(parents=True)
+    (dataset / "part-0.parquet").write_bytes(b"x" * 60)
+    assert timeseries._replay_tmp_root(str(dataset)) == shm
+    (dataset / "part-1.parquet").write_bytes(b"x" * 60)
+    assert timeseries._replay_tmp_root(str(dataset)) is None
+
+    assert timeseries._replay_tmp_root(str(tmp_path / "missing.parquet")) is None

@@ -148,7 +148,6 @@ HEADLINE = [
     "stats_bootstrap_ci",
     "stats_ab_ztest",
     "stats_pareto_share",
-    "ts_autocorrelation",
     "graph_assortativity",
     "graph_common_neighbors",
     "mm_video_dedup",
@@ -253,6 +252,7 @@ def bench_ingest_e2e(
     Returns (median_sec, cold_sec, sorted engine rec/s runs,
     total_records, sorted ref-loop rec/s runs, sorted paired ratios,
     sync-consumer rec/s twin)."""
+    import shutil
     import tempfile
 
     from data_ingestion_pimcore_spark.config import IngestRequest
@@ -280,7 +280,8 @@ def bench_ingest_e2e(
     # single-thread consumer is still measured each session as
     # ingest_records_per_sec_sync for cross-round continuity.
     def run_once(pipelined: bool = True) -> tuple[float, int]:
-        state = IngestionStateStore(tempfile.mktemp(suffix=".parquet"))
+        state_dir = tempfile.mkdtemp(prefix="bench_ingest_state_")
+        state = IngestionStateStore(f"{state_dir}/state.parquet")
         validator = (
             PipelinedChunkValidator(retain_records=False, workers=4, window=16)
             if pipelined
@@ -293,6 +294,7 @@ def bench_ingest_e2e(
         finally:
             if pipelined:
                 validator.close()
+            shutil.rmtree(state_dir, ignore_errors=True)
         assert summary.status == "COMPLETED", summary
         return dt, summary.total_records
 
@@ -337,7 +339,7 @@ def bench_ingest_e2e(
 
 
 _CONC_SCRIPT = r"""
-import json, subprocess, sys, tempfile, threading, time
+import json, shutil, subprocess, sys, tempfile, threading, time
 sys.path.insert(0, {repo!r})
 from data_ingestion_pimcore_spark.session import get_spark
 from data_ingestion_pimcore_spark.config import IngestRequest
@@ -366,11 +368,15 @@ try:
             file_path=sf_dir + "/lineitem.parquet#conc" + str(i),
             file_type="parquet", chunk_size_by_records=4000,
             re_ingestion=True, order_cols=order)
-        state = IngestionStateStore(tempfile.mktemp(suffix=".parquet"))
-        t0 = time.time()
-        s = ingest(spark, req, li, state, HttpTransport(urls[slot]))
-        assert s.status == "COMPLETED", s
-        results[i] = (time.time() - t0, s.total_records)
+        state_dir = tempfile.mkdtemp(prefix="bench_conc_state_")
+        state = IngestionStateStore(state_dir + "/state.parquet")
+        try:
+            t0 = time.time()
+            s = ingest(spark, req, li, state, HttpTransport(urls[slot]))
+            assert s.status == "COMPLETED", s
+            results[i] = (time.time() - t0, s.total_records)
+        finally:
+            shutil.rmtree(state_dir, ignore_errors=True)
 
     warm_ingest(spark, like=li, like_order_cols=order)
     res = {{}}
@@ -482,7 +488,7 @@ def bench_ingest_concurrent(
 
 
 _SCALE_SCRIPT = r"""
-import functools, json, sys, tempfile, time
+import functools, json, shutil, sys, tempfile, time
 sys.path.insert(0, {repo!r})
 from data_ingestion_pimcore_spark.session import get_spark
 from data_ingestion_pimcore_spark.config import IngestRequest
@@ -511,7 +517,8 @@ req = IngestRequest(
 
 def run_once():
     # headline protocol (r10): pipelined consumer, ordered commits
-    state = IngestionStateStore(tempfile.mktemp(suffix=".parquet"))
+    state_dir = tempfile.mkdtemp(prefix="bench_scale_state_")
+    state = IngestionStateStore(state_dir + "/state.parquet")
     v = PipelinedChunkValidator(retain_records=False, workers=4, window=16)
     try:
         t0 = time.time()
@@ -519,6 +526,7 @@ def run_once():
         dt = time.time() - t0
     finally:
         v.close()
+        shutil.rmtree(state_dir, ignore_errors=True)
     assert s.status == "COMPLETED", s
     return s.total_records / dt
 
@@ -722,7 +730,7 @@ req = IngestRequest(
     order_cols=("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
 t0 = time.time()
 _v = PipelinedChunkValidator(retain_records=False, workers=4, window=16)
-s = ingest(spark, req, li, IngestionStateStore(tempfile.mktemp(suffix=".pq")), _v)
+s = ingest(spark, req, li, IngestionStateStore(out + "/ingest_state/state.pq"), _v)
 _v.close()
 assert s.status == "COMPLETED", s
 ingest_sec = time.time() - t0

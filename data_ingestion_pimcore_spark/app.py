@@ -44,6 +44,9 @@ class IngestionService:
     # registry for inprocess:// callback urls (tests, bench)
     inprocess_transports: dict[str, Transport] = field(default_factory=dict)
     _running: dict[str, _Execution] = field(default_factory=dict)
+    # ThreadingHTTPServer serves POSTs concurrently: the live-execution
+    # check and the insert of a new one must be one step
+    _dispatch_lock: threading.Lock = field(default_factory=threading.Lock)
 
     def health(self) -> dict:
         return {"status": "ok"}
@@ -57,7 +60,12 @@ class IngestionService:
         return t
 
     def ingest(self, payload: dict) -> dict:
-        """Validate → identity → background dispatch → immediate reply."""
+        """Validate → identity → background dispatch → immediate reply.
+
+        A duplicate dispatch of an ``ingestion_id`` that is still running
+        joins that execution: same STARTED reply, no second thread (two
+        drains of the same chunks would race one consumer, and CV2 would
+        NACK one of them)."""
         try:
             request = IngestRequest(**payload)
             transport = self._resolve_transport(request.callback_url)
@@ -84,14 +92,21 @@ class IngestionService:
                     f"{s.chunks_sent} chunks, {s.total_records} records"
                 )
             except BaseException as exc:  # recorded, not raised: K1 failure
-                self._running[ingestion_id].error = exc
+                execution.error = exc
                 get_logger("error").error(
                     f"ingestion {ingestion_id[:12]} failed: {exc}"
                 )
 
-        t = threading.Thread(target=run, name=f"ingest-{ingestion_id[:12]}", daemon=True)
-        self._running[ingestion_id] = _Execution(thread=t)
-        t.start()
+        with self._dispatch_lock:
+            running = self._running.get(ingestion_id)
+            if running is None or not running.thread.is_alive():
+                execution = _Execution(
+                    thread=threading.Thread(
+                        target=run, name=f"ingest-{ingestion_id[:12]}", daemon=True
+                    )
+                )
+                self._running[ingestion_id] = execution
+                execution.thread.start()
         return {"status": "STARTED", "ingestion_id": ingestion_id}
 
     def wait(self, ingestion_id: str, timeout: float | None = None) -> dict:

@@ -761,9 +761,9 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    # r13: the broadcast hint on the vector attach is GATED on a
-    # metadata-only row-count bound (same pattern as graph.py's
-    # _bcast_nodes — parquet footer count, no data scan). r12 forced
+    # r13: the broadcast hint on the vector attach is GATED on the
+    # embeddings row count, read by an eager count() over the table —
+    # a Spark count job of its own on every call. r12 forced
     # F.broadcast unconditionally, which at corpus scale collects the
     # FULL embeddings table to the driver — exactly the §3.1 "small
     # side must fit" failure. Below the gate the hint keeps the

@@ -9,11 +9,18 @@ Batch-mode equivalent of the reference's ``stream_and_push``
 * The resume filter (``chunk_number > last_chunk``, reference K3) is a
   DataFrame predicate, so Catalyst prunes already-ACKed chunks *before*
   the expensive work on re-runs.
+* Chunks serialize in executors through one serializer (``_records``
+  → ``_seal``: canonical JSON + SHA-256) with one builder per chunking
+  mode: ``_chunk_payloads_fused`` for count mode, and
+  ``_chunk_payloads_local`` for byte mode and streaming micro-batches.
 * Only the network emit is sequential per ingestion — the consumer's
-  ordering contract (CV2) demands it (SURVEY §4.3.2). Rows stream to
-  the driver via ``toLocalIterator`` in (chunk, row) order with O(one
-  partition) driver memory; many ingestions parallelize across each
-  other.
+  ordering contract (CV2) demands it (SURVEY §4.3.2). Finished payloads
+  stream to the driver via ``toLocalIterator`` in chunk order with
+  O(one partition) driver memory, and ``deliver_payloads`` emits them
+  through one windowed, ACK-gated loop: a plain transport is its
+  ``window=1`` case, a pipelined consumer keeps several chunks in
+  flight, and commits are in order either way. Many ingestions
+  parallelize across each other.
 
 Resume semantics are the *intended* ones (the Excel path's record-skip,
 `app/services/excel_reader.py:65-69` + README:519-528), not the JSON
@@ -23,8 +30,7 @@ path's re-send bug (SURVEY §2.1 "Known reference bugs").
 from __future__ import annotations
 
 import hashlib
-import threading
-from contextlib import contextmanager
+from collections import deque
 from dataclasses import dataclass
 
 import pandas as pd
@@ -49,50 +55,23 @@ from .sink import Transport, send_chunk_with_retry
 from .state import IngestionStateStore, version_for
 
 
-def _chunk_payloads(
-    pending: DataFrame, record_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """(chunk_number, n_records, checksum, payload-JSON) per chunk.
+_PAYLOAD_COLS = [CHUNK_COL, "n_records", "checksum", "payload"]
+_PAYLOAD_SCHEMA = (
+    f"{CHUNK_COL} long, n_records long, checksum string, payload binary"
+)
 
-    ``applyInPandas`` hands each chunk to one executor task as a whole
-    Arrow group (bounded by the chunk size contract, ≤4000 records /
-    the byte budget), which serializes it canonically and hashes it —
-    the expensive Python work, parallel across chunks.
+
+def _records(pdf: pd.DataFrame, record_cols: list[str]) -> list[dict]:
+    """``pdf``'s rows as record dicts, in frame order.
+
+    Per-column tolist with null-fixing ONLY for columns that actually
+    contain nulls: a whole-frame astype(object) + where(notna) would
+    copy every value into object cells per chunk (~40% of payload-build
+    CPU); numeric/string columns without nulls convert in one C call
+    instead. dict(zip(...)) over column lists ≈ 4x pandas
+    to_dict("records") on 4000-row chunks — this runs once per chunk in
+    the hot path.
     """
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        # Per-column tolist with null-fixing ONLY for columns that
-        # actually contain nulls: a whole-frame astype(object) +
-        # where(notna) would copy every value into object cells per
-        # chunk (~40% of payload-build CPU); numeric/string columns
-        # without nulls convert in one C call instead.
-        columns = _record_columns(pdf, record_cols)
-        # dict(zip(...)) over column lists ≈ 4x pandas to_dict("records")
-        # on 4000-row chunks — this runs once per chunk in the hot path.
-        records = [dict(zip(record_cols, row)) for row in zip(*columns)]
-        blob = canonical_dumps(records)
-        # Payload stays BYTES end-to-end (Arrow binary → driver → wire):
-        # a string column would pay a UTF-8 validate/decode on the
-        # sequential driver edge for every chunk.
-        return pd.DataFrame(
-            {
-                CHUNK_COL: [int(pdf[CHUNK_COL].iloc[0])],
-                "n_records": [len(records)],
-                "checksum": [hashlib.sha256(blob).hexdigest()],
-                "payload": [blob],
-            }
-        )
-
-    return pending.groupBy(CHUNK_COL).applyInPandas(
-        build,
-        schema=f"{CHUNK_COL} long, n_records long, checksum string, payload binary",
-    )
-
-
-def _record_columns(pdf: pd.DataFrame, record_cols: list[str]) -> list[list]:
-    """Per-column tolist with null-fixing only where needed (see
-    _chunk_payloads.build)."""
     columns = []
     for c in record_cols:
         s = pdf[c]
@@ -102,7 +81,18 @@ def _record_columns(pdf: pd.DataFrame, record_cols: list[str]) -> list[list]:
             if s.isna().any():
                 vals = [None if pd.isna(v) else v for v in vals]
         columns.append(vals)
-    return columns
+    return [dict(zip(record_cols, row)) for row in zip(*columns)]
+
+
+def _seal(c: int, records: list[dict]) -> tuple[int, int, str, bytes]:
+    """One chunk's payload row: (chunk_number, n_records, checksum,
+    canonical JSON). One list-level ``canonical_dumps`` per chunk
+    (orjson per-call overhead × rows would dominate — measured 15%
+    slower). The payload stays BYTES end-to-end (Arrow binary → driver
+    → wire): a string column would pay a UTF-8 validate/decode on the
+    sequential driver edge for every chunk."""
+    blob = canonical_dumps(records)
+    return c, len(records), hashlib.sha256(blob).hexdigest(), blob
 
 
 def _ts_column_strings(s: pd.Series) -> list | None:
@@ -147,13 +137,14 @@ def _ts_column_strings(s: pd.Series) -> list | None:
 def _chunk_payloads_local(
     pending: DataFrame, record_cols: list[str], order_cols: list[str]
 ) -> DataFrame:
-    """Payload builder for BYTE-mode chunks: the caller hash-partitions
-    ``pending`` by ``chunk_number`` (see ``ingest``), so every chunk's
-    rows are co-located in one task and payloads build in place (AQE
-    may merge whole partitions, which preserves the property; resume
-    filters drop rows, never split a chunk across tasks). Any violation
-    of the co-location assumption would surface as a CV3 checksum NACK
-    at delivery, not silent corruption.
+    """Payload builder for chunks whose rows the caller co-located by
+    hash-partitioning ``pending`` on ``chunk_number`` (byte-mode batch
+    ingests and streaming micro-batches): every chunk's rows sit in one
+    task, so payloads build in place (AQE may merge whole partitions,
+    which preserves the property; resume filters drop rows, never split
+    a chunk across tasks). Any violation of the co-location assumption
+    would surface as a CV3 checksum NACK at delivery, not silent
+    corruption.
     """
 
     def run(batches):
@@ -167,21 +158,11 @@ def _chunk_payloads_local(
         for c, frames in sorted(bufs.items()):
             g = pd.concat(frames) if len(frames) > 1 else frames[0]
             g = g.sort_values(order_cols, kind="mergesort")
-            columns = _record_columns(g, record_cols)
-            records = [dict(zip(record_cols, row)) for row in zip(*columns)]
-            blob = canonical_dumps(records)
-            out.append(
-                (c, len(records), hashlib.sha256(blob).hexdigest(), blob)
-            )
+            out.append(_seal(c, _records(g, record_cols)))
         if out:
-            yield pd.DataFrame(
-                out, columns=[CHUNK_COL, "n_records", "checksum", "payload"]
-            )
+            yield pd.DataFrame(out, columns=_PAYLOAD_COLS)
 
-    return pending.mapInPandas(
-        run,
-        schema=f"{CHUNK_COL} long, n_records long, checksum string, payload binary",
-    )
+    return pending.mapInPandas(run, schema=_PAYLOAD_SCHEMA)
 
 
 def _chunk_payloads_fused(
@@ -197,8 +178,8 @@ def _chunk_payloads_fused(
     Chunk membership is a closed formula of the global row number
     (rows ``[c·size+1, min((c+1)·size, n_rows)]``), so a task that
     holds ALL of a chunk's rows serializes + hashes it locally in the
-    ordering stage itself — the full-record shuffle of the groupBy
-    path disappears. Only chunks straddling a partition border (≤ 2
+    ordering stage itself — no full-record shuffle on chunk_number
+    (the byte-mode shape) is needed. Only chunks straddling a partition border (≤ 2
     per task) emit fragments: per-row canonical JSON, merged in the
     drain's range-partition pass (which the delivery layout needed
     anyway, and which co-locates a chunk's fragments by construction).
@@ -217,11 +198,8 @@ def _chunk_payloads_fused(
     directly.
     """
 
-    out_cols = [CHUNK_COL, "n_records", "checksum", "payload", "complete", "first_rn"]
-    out_schema = (
-        f"{CHUNK_COL} long, n_records long, checksum string, payload binary, "
-        "complete boolean, first_rn long"
-    )
+    out_cols = [*_PAYLOAD_COLS, "complete", "first_rn"]
+    out_schema = f"{_PAYLOAD_SCHEMA}, complete boolean, first_rn long"
 
     def expected(c: int) -> int:
         hi = min((c + 1) * chunk_size, n_rows)
@@ -236,14 +214,7 @@ def _chunk_payloads_fused(
         pairs = sorted(
             (rn, r) for rns, recs in buf for rn, r in zip(rns, recs)
         )
-        records = [r for _, r in pairs]
-        # one list-level canonical_dumps per chunk (orjson per-call
-        # overhead × rows would dominate — measured 15% slower)
-        blob = canonical_dumps(records)
-        return (
-            c, len(records), hashlib.sha256(blob).hexdigest(), blob,
-            True, pairs[0][0],
-        )
+        return (*_seal(c, [r for _, r in pairs]), True, pairs[0][0])
 
     def emit_fragments(c: int, buf: list[tuple[list[int], list[dict]]]):
         pairs = sorted(
@@ -271,8 +242,7 @@ def _chunk_payloads_fused(
             for c, g in pdf.groupby(CHUNK_COL, sort=False):
                 c = int(c)
                 g = g.sort_values(rn_col, kind="mergesort")
-                columns = _record_columns(g, record_cols)
-                recs = [dict(zip(record_cols, row)) for row in zip(*columns)]
+                recs = _records(g, record_cols)
                 buf = open_chunks.setdefault(c, [])
                 buf.append((g[rn_col].tolist(), recs))
                 counts[c] = counts.get(c, 0) + len(recs)
@@ -490,15 +460,33 @@ def deliver_payloads(
     rely on the completion event). ``merge_fragments`` enables the
     driver-side fragment merge for the fused count-mode payload stream.
     Returns (chunks_sent, total_records).
+
+    One windowed loop serves every transport. A consumer exposing
+    ``submit``/``resolve`` (PipelinedChunkValidator) keeps up to its
+    ``pipeline_window`` chunks in flight so its pool overlaps their CV3
+    precompute; any other transport is the ``window=1`` case (submit is
+    the identity, resolve calls the transport). COMMITS — resolve(), K2
+    state update — happen strictly in submission order, one at a time.
+    A NACK at chunk i flushes everything in flight behind it (nothing
+    there was committed), spends the rest of the chunk's retry budget
+    in ``send_chunk_with_retry``, then resubmits the flushed tail in
+    order — so retry counts and no-false-progress are the same for
+    every transport.
     """
+    if hasattr(transport, "submit"):
+        submit, resolve = transport.submit, transport.resolve
+        window = transport.pipeline_window
+    else:
+        submit, resolve, window = (lambda p: p), transport, 1
+    inflight: deque = deque()
     chunks_sent = 0
 
-    def build_payload(row, is_last: bool) -> dict:
+    def enqueue(row, is_last: bool):
         # The executor-serialized canonical blob passes through as-is;
         # parsing it is consumer-side work (an HTTP consumer parses the
         # POST body), so the sequential driver edge stays O(bytes-copy)
         # per chunk instead of O(parse + re-serialize).
-        return {
+        payload = {
             "ingestion_id": ingestion_id,
             "chunk_number": row[CHUNK_COL],
             "chunk_id": build_chunk_id(ingestion_id, row[CHUNK_COL]),
@@ -506,11 +494,17 @@ def deliver_payloads(
             "records_json": row["payload"],
             "is_last": is_last,
         }
+        inflight.append((row, payload, submit(payload)))
 
-    def flush(row, is_last: bool):
+    def commit_one():
         nonlocal chunks_sent, total_records
-        payload = build_payload(row, is_last)
-        send_chunk_with_retry(transport, payload)  # raises after 3 NACKs
+        row, payload, handle = inflight.popleft()
+        resp = resolve(handle)
+        if not resp.ack:
+            tail = [(r, p) for r, p, _ in inflight]
+            inflight.clear()
+            send_chunk_with_retry(transport, payload, first=resp)
+            inflight.extend((r, p, submit(p)) for r, p in tail)
         total_records += row["n_records"]
         # K2: ACK-gated offset commit — no false progress.
         state.update_chunk(ingestion_id, row[CHUNK_COL], total_records)
@@ -519,84 +513,6 @@ def deliver_payloads(
     rows = payloads.toLocalIterator(prefetchPartitions=True)
     if merge_fragments:
         rows = _merge_fragment_rows(rows)
-    window = int(getattr(transport, "pipeline_window", 0) or 0)
-    if window > 1 and hasattr(transport, "submit"):
-        return _deliver_pipelined(
-            rows,
-            build_payload,
-            transport,
-            state,
-            ingestion_id,
-            total_records,
-            mark_last,
-            window,
-        )
-    prev = None
-    for row in rows:
-        if prev is not None:
-            flush(prev, is_last=False)
-        prev = row
-    if prev is not None:
-        flush(prev, is_last=mark_last)
-    return chunks_sent, total_records
-
-
-def _deliver_pipelined(
-    rows,
-    build_payload,
-    transport,
-    state,
-    ingestion_id: str,
-    total_records: int,
-    mark_last: bool,
-    window: int,
-) -> tuple[int, int]:
-    """Windowed variant of the ordered emit for consumers that expose
-    ``submit``/``resolve`` (PipelinedChunkValidator): up to ``window``
-    chunks are in flight so the consumer's pool overlaps their CV3
-    precompute, while COMMITS — resolve(), K2 state update — happen
-    strictly in submission order, one at a time, exactly like the
-    synchronous loop. A NACK at chunk i discards everything in flight
-    behind it (nothing was committed), retries i through the bounded
-    synchronous path (the remaining MAX_ATTEMPTS-1 attempts), then
-    resubmits the discarded chunks in order — so failure semantics,
-    retry counts, and no-false-progress match the synchronous loop."""
-    from collections import deque
-
-    from .sink import MAX_ATTEMPTS, ChunkRejected
-
-    inflight: deque = deque()
-    chunks_sent = 0
-
-    def commit_one():
-        nonlocal chunks_sent, total_records
-        row, payload, handle = inflight.popleft()
-        resp = transport.resolve(handle)
-        if not resp.ack:
-            # pipeline flush: later in-flight chunks were never
-            # committed; recover this chunk synchronously, then
-            # resubmit the flushed tail in order
-            pending = [(r, p) for r, p, _ in inflight]
-            inflight.clear()
-            for _attempt in range(MAX_ATTEMPTS - 1):
-                resp = transport(payload)
-                if resp.ack:
-                    break
-            if not resp.ack:
-                raise ChunkRejected(
-                    f"chunk {payload.get('chunk_number')} rejected after "
-                    f"{MAX_ATTEMPTS} attempts: {resp.error}"
-                )
-            for r, p in pending:
-                inflight.append((r, p, transport.submit(p)))
-        total_records += row["n_records"]
-        state.update_chunk(ingestion_id, payload["chunk_number"], total_records)
-        chunks_sent += 1
-
-    def enqueue(row, is_last: bool):
-        payload = build_payload(row, is_last)
-        inflight.append((row, payload, transport.submit(payload)))
-
     prev = None
     for row in rows:
         if prev is not None:
@@ -654,103 +570,6 @@ def _chunked(
     )
 
 
-_MAX_BYTES_KEY = "spark.sql.execution.arrow.maxBytesPerBatch"
-_MAX_RECS_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
-_ARROW_CONF_LOCK = threading.Lock()
-_ARROW_CONF_STATE: dict = {}
-
-
-@contextmanager
-def _ingest_arrow_conf(spark: SparkSession, request: IngestRequest):
-    """Arrow-input tuning for the count-mode drain window.
-
-    Spark's JVM→Python Arrow writer enforces
-    ``spark.sql.execution.arrow.maxBytesPerBatch`` by calling
-    ``ArrowWriter.sizeInBytes()`` — a recursive walk of every vector's
-    buffers — after EVERY row (BatchedPythonArrowInput), the hottest
-    JVM path of the payload-build stage in a JFR profile (~3 core-s per
-    sf0.1 ingest, linear in rows). The Int.MaxValue sentinel disables
-    the walk entirely. That trade is safe HERE because count-mode
-    batches are simultaneously re-capped to the chunk size, so a batch
-    is never bigger than one chunk payload — memory the drain
-    materializes per chunk anyway. It would NOT be safe globally:
-    blob-heavy stages (multimodal) rely on the byte cap. Byte-mode
-    ingests keep the default cap too (records there may be large — the
-    byte budget, not a record count, is the contract).
-
-    Runtime confs are read per-execution, so the try/finally window
-    covers exactly this ingestion's drain jobs. Concurrent ingestions
-    reference-count the window (module lock) — BOTH modes register, so
-    the byte-cap sentinel is only ever set while NO byte-mode drain is
-    active in the session (a byte-mode ingest sharing the window would
-    otherwise silently lose the cap it relies on). The sentinel is
-    applied by the first count-mode drain in, dropped the moment a
-    byte-mode drain enters, re-applied when the last byte-mode drain
-    leaves, and fully restored by the last drain out. The record cap
-    uses the SMALLEST active chunk size — caps only tighten, never
-    loosen, under concurrency.
-    """
-    conf = spark.conf
-    mode = "count" if request.chunk_size_by_records is not None else "byte"
-    with _ARROW_CONF_LOCK:
-        st = _ARROW_CONF_STATE
-        if not st:
-            old = {}
-            for k in (_MAX_BYTES_KEY, _MAX_RECS_KEY):
-                try:
-                    old[k] = conf.get(k)
-                except Exception:
-                    old[k] = None
-            st.update(saved=old, count=0, byte=0, cap=None)
-        st[mode] += 1
-        if mode == "count":
-            cap = min(10_000, request.chunk_size_by_records)
-            if st["cap"] is None or cap < st["cap"]:
-                st["cap"] = cap
-        _arrow_conf_sync(conf, st)
-    try:
-        yield
-    finally:
-        with _ARROW_CONF_LOCK:
-            st = _ARROW_CONF_STATE
-            st[mode] -= 1
-            if st["count"] == 0 and st["byte"] == 0:
-                for k, v in st["saved"].items():
-                    if v is None:
-                        conf.unset(k)
-                    else:
-                        conf.set(k, v)
-                st.clear()
-            else:
-                _arrow_conf_sync(conf, st)
-
-
-def _arrow_conf_sync(conf, st: dict) -> None:
-    """Reconcile the Arrow batch caps with the active-drain census.
-
-    Called with ``_ARROW_CONF_LOCK`` held and ``st`` initialized. The
-    byte-size sentinel is safe only while every active drain is
-    count-mode (each batch then re-capped to a chunk's record count);
-    one byte-mode entrant and the saved cap comes straight back.
-    """
-
-    def _restore(key: str) -> None:
-        v = st["saved"][key]
-        if v is None:
-            conf.unset(key)
-        else:
-            conf.set(key, v)
-
-    if st["count"] > 0 and st["byte"] == 0:
-        conf.set(_MAX_BYTES_KEY, "2147483647")
-    else:
-        _restore(_MAX_BYTES_KEY)
-    if st["count"] > 0:
-        conf.set(_MAX_RECS_KEY, str(st["cap"]))
-    else:
-        _restore(_MAX_RECS_KEY)
-
-
 def ingest(
     spark: SparkSession,
     request: IngestRequest,
@@ -788,8 +607,9 @@ def ingest(
         # K3: skip already-ACKed chunks — a pushed-down predicate, so
         # re-runs never recompute completed work.
         pending = chunked.where(F.col(CHUNK_COL) > last_chunk)
-    # Canonicalization + checksumming run IN EXECUTORS (one Arrow group
-    # per chunk), in parallel across all cores; the driver only streams
+    # Canonicalization + checksumming run IN EXECUTORS (each chunk
+    # sealed in the task holding its rows), in parallel across all
+    # cores; the driver only streams
     # the finished payloads in chunk order and performs the (contract-
     # mandated sequential, CV2) network emit. Payload bytes are the
     # canonical JSON the consumer re-hashes, so producer and consumer
@@ -852,16 +672,15 @@ def ingest(
     # every partition's expensive work is parallel and complete by the
     # first row — the background materialization only duplicated it
     # (interleaved A/B at sf0.1: statistically flat, 5.2-5.8 s both).
-    with _ingest_arrow_conf(spark, request):
-        chunks_sent, total_records = deliver_payloads(
-            payloads,
-            ingestion_id,
-            state,
-            transport,
-            total_records,
-            mark_last=True,
-            merge_fragments=request.chunk_size_by_records is not None,
-        )
+    chunks_sent, total_records = deliver_payloads(
+        payloads,
+        ingestion_id,
+        state,
+        transport,
+        total_records,
+        mark_last=True,
+        merge_fragments=request.chunk_size_by_records is not None,
+    )
 
     # K4: completion handshake; mark COMPLETED only after consumer ACK.
     last = state.get_last_chunk(ingestion_id)

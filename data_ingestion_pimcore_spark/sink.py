@@ -140,8 +140,11 @@ class PipelinedChunkValidator(ChunkValidator):
     pool over a window of in-flight chunks, while every state mutation
     — the actual CV1/CV2/CV4/CV5 bookkeeping and the CV3 verdict —
     happens strictly in submission order on the committing caller's
-    thread (``resolve`` is called in-order by the windowed producer
-    loop in ``pipeline.deliver_payloads``).
+    thread. ``pipeline.deliver_payloads`` is one windowed loop for
+    every transport: for this consumer it keeps ``pipeline_window``
+    chunks submitted and calls ``resolve`` in order; a NACK flushes the
+    uncommitted tail and hands the chunk to ``send_chunk_with_retry``
+    for the rest of its attempts through ``__call__``.
 
     This is consumer-side design headroom, not a contract change: CV2
     orders COMMITS, and commits here are exactly as ordered as the
@@ -277,19 +280,27 @@ class PipelinedChunkValidator(ChunkValidator):
 Transport = Callable[[dict], AckResponse]
 
 
-def send_chunk_with_retry(transport: Transport, payload: dict) -> AckResponse:
+def send_chunk_with_retry(
+    transport: Transport, payload: dict, first: AckResponse | None = None
+) -> AckResponse:
     """At-least-once delivery with bounded retry; ACK gate, not HTTP
-    status, decides success (json_reader.py:163-196; README:345-362)."""
-    last_err = None
-    for _attempt in range(MAX_ATTEMPTS):
+    status, decides success (json_reader.py:163-196; README:345-362).
+
+    ``first`` is the response to an attempt the caller already made (the
+    windowed delivery loop's ``resolve``); it counts against the
+    MAX_ATTEMPTS budget, so a chunk is tried MAX_ATTEMPTS times in all
+    on every delivery path."""
+    resp = transport(payload) if first is None else first
+    attempts = 1
+    while not resp.ack:
+        if attempts == MAX_ATTEMPTS:
+            raise ChunkRejected(
+                f"chunk {payload.get('chunk_number')} rejected after "
+                f"{MAX_ATTEMPTS} attempts: {resp.error}"
+            )
         resp = transport(payload)
-        if resp.ack:
-            return resp
-        last_err = resp.error
-    raise ChunkRejected(
-        f"chunk {payload.get('chunk_number')} rejected after "
-        f"{MAX_ATTEMPTS} attempts: {last_err}"
-    )
+        attempts += 1
+    return resp
 
 
 class HttpTransport:

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from .chunker import CHUNK_COL, assign_chunks_by_count
 from .config import IngestRequest
 from .integrity import build_file_id, build_ingestion_id
-from .pipeline import IngestSummary, _chunk_payloads, deliver_payloads
+from .pipeline import IngestSummary, _chunk_payloads_local, deliver_payloads
 from .sink import Transport
 from .state import IngestionStateStore, version_for
 
@@ -104,7 +104,13 @@ def stream_ingest(
         chunked = assign_chunks_by_count(batch_df, order_cols, size).withColumn(
             CHUNK_COL, F.col(CHUNK_COL) + F.lit(base).cast("long")
         )
-        payloads = _chunk_payloads(chunked, record_cols, order_cols).orderBy(CHUNK_COL)
+        # The batch byte-mode shape: a hash exchange on chunk_number
+        # co-locates each chunk's rows, payloads build in place, and the
+        # sort restores chunk order (numbers start at ``base``, so the
+        # batch path's dense drain layout does not apply).
+        payloads = _chunk_payloads_local(
+            chunked.repartition(F.col(CHUNK_COL)), record_cols, order_cols
+        ).orderBy(CHUNK_COL)
         deliver_payloads(
             payloads, ingestion_id, state, transport, totals, mark_last=False
         )

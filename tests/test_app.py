@@ -101,3 +101,63 @@ def test_ingest_failure_reported_not_raised(spark, tmp_path):
     assert final["status"] == "IN_PROGRESS"  # never falsely COMPLETED
     assert "rejected after 3 attempts" in final["error"]
     assert final["last_chunk"] == 0  # chunk 0 ACKed, chunk 1 never committed
+
+
+def test_duplicate_dispatch_joins_running_execution(spark, tmp_path, monkeypatch):
+    """A second POST of an ingestion that is still running joins it: the
+    same STARTED reply, no second drain. The transport holds chunk 0
+    until the duplicate POST has been answered, so the first execution
+    is live when the duplicate arrives."""
+    import threading
+
+    from data_ingestion_pimcore_spark import app
+    from data_ingestion_pimcore_spark.sink import ERR_OUT_OF_ORDER
+
+    runs = []
+    real_run = app.run_ingestion
+
+    def counting_run(*a, **kw):
+        runs.append(threading.current_thread().name)
+        return real_run(*a, **kw)
+
+    monkeypatch.setattr(app, "run_ingestion", counting_run)
+
+    v = ChunkValidator()
+    arrived, release = threading.Event(), threading.Event()
+    chunk0_deliveries, responses = [], []
+
+    def gated(payload):
+        if payload.get("status") != "COMPLETED" and payload["chunk_number"] == 0:
+            chunk0_deliveries.append(1)
+            arrived.set()
+            release.wait(60)
+        resp = v(payload)
+        responses.append(resp)
+        return resp
+
+    svc = IngestionService(
+        spark,
+        IngestionStateStore(str(tmp_path / "state.pq")),
+        inprocess_transports={"inprocess://validator": gated},
+    )
+    payload = {
+        "file_path": f"{SF}/lineitem.parquet",
+        "file_type": "parquet",
+        "chunk_size_by_records": 2000,
+        "order_cols": ("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
+    }
+    first = svc.ingest(payload)
+    assert arrived.wait(120)
+    second = svc.ingest(payload)
+    assert second == first == {
+        "status": "STARTED",
+        "ingestion_id": first["ingestion_id"],
+    }
+    release.set()
+    final = svc.wait(first["ingestion_id"], timeout=300)
+    assert final["status"] == "COMPLETED" and final["error"] is None
+    assert len(runs) == 1
+    assert len(chunk0_deliveries) == 1
+    assert v.received_chunks == list(range(3))
+    assert not any(r.error == ERR_OUT_OF_ORDER for r in responses)
+    assert v.completed == [first["ingestion_id"]]

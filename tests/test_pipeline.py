@@ -142,12 +142,15 @@ def test_permanent_nack_no_false_progress(spark, tmp_path, products):
     """A chunk NACKed 3× fails the run; state stops at the last ACK —
     earlier chunks are never rolled back (README:294-299, 471-482)."""
 
+    from data_ingestion_pimcore_spark.sink import MAX_ATTEMPTS, AckResponse
+
     class AlwaysReject(ChunkValidator):
+        deliveries_of_5 = 0
+
         def __call__(self, payload):
             is_chunk = payload.get("status") != "COMPLETED"
             if payload.get("chunk_number") == 5 and is_chunk:
-                from data_ingestion_pimcore_spark.sink import AckResponse
-
+                self.deliveries_of_5 += 1
                 return AckResponse(False, payload["ingestion_id"], 5, "boom")
             return super().__call__(payload)
 
@@ -157,8 +160,11 @@ def test_permanent_nack_no_false_progress(spark, tmp_path, products):
     iid = build_ingestion_id(
         build_file_id(req.file_path, req.file_type), version_for(False)
     )
-    with pytest.raises(ChunkRejected):
+    with pytest.raises(ChunkRejected, match="rejected after 3 attempts"):
         ingest(spark, req, products, state, validator)
+    # the retry budget is exact: no attempt lost or added by the loop
+    assert MAX_ATTEMPTS == 3
+    assert validator.deliveries_of_5 == MAX_ATTEMPTS
     assert state.get_last_chunk(iid) == 4
     assert state.get_total_records(iid) == 50
     assert state.get_status(iid) == "IN_PROGRESS"
@@ -342,15 +348,18 @@ def test_warm_ingest_runs(spark):
 
 def test_fused_payloads_equal_groupby_payloads(spark):
     """The fused builder (complete-in-task + fragment merge) must
-    produce byte-identical payloads and checksums to the shuffle-based
-    groupBy builder for every chunk, across chunk sizes that do and
-    don't divide the row count (fragment-heavy cases included)."""
+    produce byte-identical payloads and checksums to the co-located
+    builder on the same chunked frame hash-partitioned by chunk_number
+    (the byte-mode and streaming shape) for every chunk, across chunk
+    sizes that do and don't divide the row count (fragment-heavy cases
+    included)."""
     from pyspark.sql import functions as F
 
     from data_ingestion_pimcore_spark.pipeline import (
+        CHUNK_COL,
         _RESUME_RN,
-        _chunk_payloads,
         _chunk_payloads_fused,
+        _chunk_payloads_local,
         _chunked,
         _merge_fragment_rows,
     )
@@ -387,8 +396,10 @@ def test_fused_payloads_equal_groupby_payloads(spark):
                 fused.orderBy("chunk_number", "first_rn").collect()
             )
         }
-        grp = _chunk_payloads(
-            chunked.drop(_RESUME_RN), li.columns, order
+        grp = _chunk_payloads_local(
+            chunked.drop(_RESUME_RN).repartition(F.col(CHUNK_COL)),
+            li.columns,
+            order,
         ).collect()
         want = {
             r["chunk_number"]: (r["n_records"], r["checksum"], bytes(r["payload"]))
@@ -742,71 +753,6 @@ def test_ts_column_strings_byte_identical_to_isoformat():
     assert _ts_column_strings(pd.Series([1, 2])) is None
 
 
-def test_ingest_arrow_conf_window_refcounted(spark):
-    """The drain-window Arrow conf must nest across concurrent
-    ingestions: set by the first in, restored only by the last out,
-    record cap tightening to the smallest active chunk size."""
-    from data_ingestion_pimcore_spark.config import IngestRequest
-    from data_ingestion_pimcore_spark.pipeline import (
-        _MAX_BYTES_KEY,
-        _MAX_RECS_KEY,
-        _ingest_arrow_conf,
-    )
-
-    before_bytes = spark.conf.get(_MAX_BYTES_KEY)
-    before_recs = spark.conf.get(_MAX_RECS_KEY)
-    r1 = IngestRequest(
-        file_path="x", file_type="parquet", chunk_size_by_records=4000,
-        order_cols=("a",),
-    )
-    r2 = IngestRequest(
-        file_path="y", file_type="parquet", chunk_size_by_records=2000,
-        order_cols=("a",),
-    )
-    with _ingest_arrow_conf(spark, r1):
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-        assert spark.conf.get(_MAX_RECS_KEY) == "4000"
-        with _ingest_arrow_conf(spark, r2):
-            assert spark.conf.get(_MAX_RECS_KEY) == "2000"
-        # inner exit must NOT restore while the outer is active
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-    assert spark.conf.get(_MAX_RECS_KEY) == before_recs
-
-    # byte-mode ingests leave the confs alone when running solo ...
-    rb = IngestRequest(
-        file_path="z", file_type="parquet",
-        chunk_size_by_memory=1024, order_cols=("a",),
-    )
-    with _ingest_arrow_conf(spark, rb):
-        assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-        assert spark.conf.get(_MAX_RECS_KEY) == before_recs
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-
-    # ... and SUPPRESS the byte-cap sentinel while sharing the window
-    # with a count-mode drain: a blob-heavy byte-mode ingest must never
-    # silently lose the byte cap it relies on (round-9 ADVICE).
-    with _ingest_arrow_conf(spark, r1):
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-        with _ingest_arrow_conf(spark, rb):
-            # byte-mode entrant drops the sentinel immediately ...
-            assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-            # ... but the count-mode record cap stays (caps only tighten)
-            assert spark.conf.get(_MAX_RECS_KEY) == "4000"
-        # last byte-mode exit re-applies the sentinel for the survivor
-        assert spark.conf.get(_MAX_BYTES_KEY) == "2147483647"
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-    assert spark.conf.get(_MAX_RECS_KEY) == before_recs
-
-    # byte-mode entering FIRST blocks the sentinel for a later count-mode
-    with _ingest_arrow_conf(spark, rb):
-        with _ingest_arrow_conf(spark, r2):
-            assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-            assert spark.conf.get(_MAX_RECS_KEY) == "2000"
-    assert spark.conf.get(_MAX_BYTES_KEY) == before_bytes
-    assert spark.conf.get(_MAX_RECS_KEY) == before_recs
-
-
 # ---------------------------- pipelined (windowed) consumer validation
 
 
@@ -847,16 +793,21 @@ def test_pipelined_permanent_nack_no_false_progress(spark, tmp_path, products):
     the failed chunk may have committed — state stops at the last ACK
     even though later chunks were in flight when the NACK landed."""
     from data_ingestion_pimcore_spark.sink import (
+        MAX_ATTEMPTS,
         AckResponse,
         PipelinedChunkValidator,
     )
 
     class AlwaysReject(PipelinedChunkValidator):
+        deliveries_of_5 = 0
+
         def _veto(self, payload):
-            return (
+            veto = (
                 payload.get("chunk_number") == 5
                 and payload.get("status") != "COMPLETED"
             )
+            self.deliveries_of_5 += veto
+            return veto
 
         def resolve(self, handle):
             if self._veto(handle.payload):
@@ -874,8 +825,11 @@ def test_pipelined_permanent_nack_no_false_progress(spark, tmp_path, products):
         iid = build_ingestion_id(
             build_file_id(req.file_path, req.file_type), version_for(False)
         )
-        with pytest.raises(ChunkRejected):
+        with pytest.raises(ChunkRejected, match="rejected after 3 attempts"):
             ingest(spark, req, products, state, validator)
+        # one resolve() + the rest through the synchronous retry: the
+        # same budget as the plain transport, split across two calls
+        assert validator.deliveries_of_5 == MAX_ATTEMPTS == 3
         assert state.get_last_chunk(iid) == 4
         assert state.get_total_records(iid) == 50
         assert state.get_status(iid) == "IN_PROGRESS"

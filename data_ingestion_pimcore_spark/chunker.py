@@ -73,14 +73,17 @@ _LAST_PID_PATH: str | None = None
 
 
 # Rows per range for the data-scaled task width (_auto_ranges). 50k was
-# the CPU-parity point of the JFR per-task-overhead table below; the
+# the CPU-parity point of the per-task-overhead table below; the
 # round-10 interleaved A/B (pipelined consumer, sf0.1, 600k rows)
 # re-measured the WALL optimum at 20k: 30-wide canonicalize read a
-# median 234k rec/s vs 166k at 12-wide — the ~5 extra core-s of Arrow
-# runner setup buys 2.6x more parallel width on the dominant map stage.
-# Inputs ≥ 1.6M rows hit the shuffle-partition cap either way, so the
-# 10x/100x probes are unaffected; concurrent-ingest scaling re-verified
-# after the change (BASELINE.md r10). Env-overridable for A/Bs.
+# median 234k rec/s vs 166k at 12-wide — the ~5 extra core-s of per-task
+# setup buys 2.6x more parallel width on the dominant map stage. That
+# setup was the Python worker re-reading pyspark.zip on every task (see
+# worker_daemon), not the JVM, and is gone; both values were tuned
+# around it and have not been re-measured since. Inputs ≥ 1.6M rows hit
+# the shuffle-partition cap either way, so the 10x/100x probes are
+# unaffected; concurrent-ingest scaling re-verified after the change
+# (BASELINE.md r10). Env-overridable for A/Bs.
 def _rows_per_range_default() -> int:
     import os
 
@@ -127,13 +130,18 @@ def _auto_ranges(df: DataFrame) -> int | None:
     """Range count scaled to the data: ~_ROWS_PER_RANGE rows per range,
     capped at spark.sql.shuffle.partitions.
 
-    The Arrow Python runner costs a fixed ~0.25 core-s of JVM CPU per
-    TASK regardless of row count (measured: 4/8/16/32/64 tasks over the
-    same 600k rows → 4.5/5.2/9.0/11.8/19.2 core-s), so running a small
-    ingest at the full configured width burns most of its CPU on runner
-    setup — wasted heat for one ingestion, stolen throughput when four
-    run concurrently. ~50k rows/range puts per-task real work at parity
-    with that overhead; big inputs still hit the configured cap."""
+    Each Arrow Python task has a fixed, data-independent cost, so
+    running a small ingest at the full configured width spends its CPU
+    on task setup: wasted heat for one ingestion, stolen throughput when
+    four run concurrently. The width was tuned when that cost was
+    ~0.25 core-s per task (4/8/16/32/64 tasks over the same 600k rows →
+    4.5/5.2/9.0/11.8/19.2 core-s), almost all of it the Python worker
+    re-reading pyspark.zip's directory in ``importlib.invalidate_caches``
+    on CPython < 3.12, not the JVM. Under ``worker_daemon`` a task costs
+    ~0.06-0.07 core-s (~25 ms JVM + ~40 ms Python, mapInPandas over
+    600k rows at 4/16/64 tasks, 4 vCPUs). ~50k rows/range put per-task
+    real work at parity with the old cost; big inputs still hit the
+    configured cap."""
     est = _rows_estimate(df)
     if est is None:
         return None

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 import pyarrow as pa
@@ -77,6 +78,10 @@ class IngestionStateStore:
                         continue
                     self._rows[row["ingestion_id"]] = row
         self._log = open(self.log_path, "a", encoding="utf-8")
+        # One lock over every write: concurrent ingestions share a store,
+        # and a commit appended between compact()'s snapshot and its log
+        # truncate would otherwise be lost from disk.
+        self._lock = threading.RLock()
 
     # -- reads (defaults per ingestion_state_store.py:36-50) --------------
 
@@ -100,21 +105,23 @@ class IngestionStateStore:
             "total_records": int(total_records),
             "status": STATUS_IN_PROGRESS,
         }
-        self._rows[ingestion_id] = row
-        self._append(row)
+        with self._lock:
+            self._rows[ingestion_id] = row
+            self._append(row)
 
     def mark_completed(self, ingestion_id: str):
-        row = self._rows.setdefault(
-            ingestion_id,
-            {
-                "ingestion_id": ingestion_id,
-                "last_chunk": -1,
-                "total_records": 0,
-                "status": STATUS_IN_PROGRESS,
-            },
-        )
-        row["status"] = STATUS_COMPLETED
-        self.compact()
+        with self._lock:
+            row = self._rows.setdefault(
+                ingestion_id,
+                {
+                    "ingestion_id": ingestion_id,
+                    "last_chunk": -1,
+                    "total_records": 0,
+                    "status": STATUS_IN_PROGRESS,
+                },
+            )
+            row["status"] = STATUS_COMPLETED
+            self.compact()
 
     def _append(self, row: dict) -> None:
         self._log.write(json.dumps(row) + "\n")
@@ -123,14 +130,15 @@ class IngestionStateStore:
     def compact(self) -> None:
         """Fold the log into the parquet snapshot (durable: fsync'd)."""
         tmp = f"{self.path}.tmp"
-        pq.write_table(
-            pa.Table.from_pylist(list(self._rows.values()), schema=_SCHEMA), tmp
-        )
-        with open(tmp, "rb+") as f:
-            os.fsync(f.fileno())
-        os.replace(tmp, self.path)  # atomic on POSIX
-        self._log.truncate(0)
-        self._log.seek(0)
+        with self._lock:
+            pq.write_table(
+                pa.Table.from_pylist(list(self._rows.values()), schema=_SCHEMA), tmp
+            )
+            with open(tmp, "rb+") as f:
+                os.fsync(f.fileno())
+            os.replace(tmp, self.path)  # atomic on POSIX
+            self._log.truncate(0)
+            self._log.seek(0)
 
     def as_dataframe(self, spark: SparkSession) -> DataFrame:
         self.compact()

@@ -61,10 +61,13 @@ def spread(df: DataFrame) -> DataFrame:
 
     The target is the session's task slots (``defaultParallelism``),
     capped by ``spark.sql.shuffle.partitions``. Each Arrow Python task
-    carries a fixed runner cost (~0.25 core-s, data-independent), and
-    AQE never coalesces an explicit ``repartition(n)``, so splitting a
-    small input into more tasks than slots only adds waves of that
-    fixed cost. At real scale the scan has plenty of splits and this is
+    carries a fixed, data-independent cost, and AQE never coalesces an
+    explicit ``repartition(n)``, so splitting a small input into more
+    tasks than slots only adds waves of that fixed cost. The cap was
+    set when the cost was ~0.25 core-s per task, nearly all of it the
+    Python worker re-reading pyspark.zip on every task; under
+    ``worker_daemon`` it is ~0.06-0.07 core-s (~25 ms JVM + ~40 ms
+    Python). At real scale the scan has plenty of splits and this is
     a no-op — the condition, not the repartition, is the point.
     """
     spark = df.sparkSession

@@ -338,6 +338,77 @@ def test_state_store_wal_torn_tail(tmp_path):
     assert s2.get_total_records("ing-a") == 99
 
 
+def test_state_store_compact_keeps_concurrent_commit(tmp_path, monkeypatch):
+    """A commit from a second ingestion that arrives while another
+    ingestion's mark_completed is compacting survives on disk: it can no
+    longer be appended after the snapshot was taken and then truncated
+    away with the log."""
+    import threading
+
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "st.parquet")
+    store = IngestionStateStore(p)
+    store.update_chunk("ing-a", 0, 10)
+    real_write = pq.write_table
+    other: list[threading.Thread] = []
+
+    def write_with_commit_mid_compaction(table, where, *args, **kwargs):
+        if not other:  # the snapshot table is built; the log is not yet truncated
+            t = threading.Thread(target=store.update_chunk, args=("ing-b", 7, 70))
+            other.append(t)
+            t.start()
+            t.join(timeout=0.5)  # unlocked, the commit lands right here
+        return real_write(table, where, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", write_with_commit_mid_compaction)
+    store.mark_completed("ing-a")
+    other[0].join(timeout=10)
+    assert not other[0].is_alive()
+    reopened = IngestionStateStore(p)
+    assert reopened.get_status("ing-a") == "COMPLETED"
+    assert reopened.get_last_chunk("ing-b") == 7
+    assert reopened.get_total_records("ing-b") == 70
+
+
+def test_state_store_concurrent_commits_and_compactions(tmp_path):
+    """Stress: eight ingestions commit while another thread compacts in
+    a loop; after reopening, every ingestion's last commit is on disk."""
+    import sys
+    import threading
+
+    store = IngestionStateStore(str(tmp_path / "st.parquet"))
+    n_ids, n_chunks = 8, 60
+    done = threading.Event()
+
+    def commit(i):
+        for c in range(n_chunks):
+            store.update_chunk(f"ing-{i}", c, c + 1)
+
+    def compact():
+        while not done.is_set():
+            store.compact()
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        compactor = threading.Thread(target=compact)
+        workers = [threading.Thread(target=commit, args=(i,)) for i in range(n_ids)]
+        compactor.start()
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+        done.set()
+        compactor.join(timeout=60)
+    finally:
+        done.set()
+        sys.setswitchinterval(prev)
+    assert not compactor.is_alive() and not any(w.is_alive() for w in workers)
+    reopened = IngestionStateStore(str(tmp_path / "st.parquet"))
+    assert [reopened.get_last_chunk(f"ing-{i}") for i in range(n_ids)] == [n_chunks - 1] * n_ids
+
+
 def test_warm_ingest_runs(spark):
     """Service-startup warm-up completes end-to-end (miniature
     ingestion through all ingest() plan shapes)."""

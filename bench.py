@@ -191,7 +191,6 @@ HEADLINE = [
     "sim_recall_pq",
     "sim_recall_ivf_persisted",
     "sim_recall_upsert",
-    "ingest_pipelined_parity",
 ]
 
 
@@ -247,20 +246,16 @@ def _ref_loop_once(blob: bytes) -> float:
 
 def bench_ingest_e2e(
     spark, sf_dir: str
-) -> tuple[float, float, list[float], int, list[float], list[float], float]:
+) -> tuple[float, float, list[float], int, list[float], list[float]]:
     """lineitem → canonicalize → chunk(4000) → checksum → ACK sink.
     Returns (median_sec, cold_sec, sorted engine rec/s runs,
-    total_records, sorted ref-loop rec/s runs, sorted paired ratios,
-    sync-consumer rec/s twin)."""
+    total_records, sorted ref-loop rec/s runs, sorted paired ratios)."""
     import shutil
     import tempfile
 
     from data_ingestion_pimcore_spark.config import IngestRequest
     from data_ingestion_pimcore_spark.pipeline import ingest
-    from data_ingestion_pimcore_spark.sink import (
-        ChunkValidator,
-        PipelinedChunkValidator,
-    )
+    from data_ingestion_pimcore_spark.sink import ChunkValidator
     from data_ingestion_pimcore_spark.state import IngestionStateStore
 
     li = spark.read.parquet(f"{sf_dir.rstrip('/')}/lineitem.parquet")
@@ -272,28 +267,16 @@ def bench_ingest_e2e(
         order_cols=("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
     )
 
-    # Headline protocol since r10: the consumer validates CV3 on a
-    # 4-process pool behind a strictly ordered commit stage
-    # (PipelinedChunkValidator) — consumer-side design headroom the r9
-    # verdict asked to A/B (measured: validation fully overlaps the
-    # drain; sync-consumer runs pay ~+0.5 s at sf0.1). The synchronous
-    # single-thread consumer is still measured each session as
-    # ingest_records_per_sec_sync for cross-round continuity.
-    def run_once(pipelined: bool = True) -> tuple[float, int]:
+    def run_once() -> tuple[float, int]:
         state_dir = tempfile.mkdtemp(prefix="bench_ingest_state_")
         state = IngestionStateStore(f"{state_dir}/state.parquet")
-        validator = (
-            PipelinedChunkValidator(retain_records=False, workers=4, window=16)
-            if pipelined
-            else ChunkValidator(retain_records=False)
-        )
         try:
             t0 = time.time()
-            summary = ingest(spark, req, li, state, validator)
+            summary = ingest(
+                spark, req, li, state, ChunkValidator(retain_records=False)
+            )
             dt = time.time() - t0
         finally:
-            if pipelined:
-                validator.close()
             shutil.rmtree(state_dir, ignore_errors=True)
         assert summary.status == "COMPLETED", summary
         return dt, summary.total_records
@@ -329,13 +312,46 @@ def bench_ingest_e2e(
         ref_runs.append(_ref_loop_once(blob))
         eng = runs[-1][1] / runs[-1][0]
         ratios.append(((ref_runs[-2] + ref_runs[-1]) / 2) / eng)
-    # one bracketed sync-consumer reading (cross-round continuity twin)
-    sync_run = run_once(pipelined=False)
-    sync_rps = sync_run[1] / sync_run[0]
     total = runs[0][1]
     rps = sorted(r[1] / r[0] for r in runs)
     dt = sorted(r[0] for r in runs)[1]
-    return dt, cold, rps, total, sorted(ref_runs), sorted(ratios), sync_rps
+    return dt, cold, rps, total, sorted(ref_runs), sorted(ratios)
+
+
+def _run_probe(name: str, script: str, timeout: float) -> dict | None:
+    """Run a probe script in a fresh interpreter and return the last JSON
+    object it printed. A probe that dies, times out or prints no result
+    returns None after printing one line to stderr —
+    ``# <name> FAILED (exit N | signal N | timeout): <stderr tail>`` —
+    so a missing metric always says why (a probe must never fail the
+    whole bench)."""
+    import subprocess
+
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", script],
+            capture_output=True,
+            text=True,
+            timeout=timeout,
+        )
+    except subprocess.TimeoutExpired as exc:
+        why, err = "timeout", exc.stderr
+    else:
+        for line in reversed(out.stdout.splitlines()):
+            if line.startswith("{"):
+                try:
+                    return json.loads(line)
+                except ValueError:
+                    break
+        rc = out.returncode
+        why, err = (f"signal {-rc}" if rc < 0 else f"exit {rc}"), out.stderr
+    if isinstance(err, bytes):
+        err = err.decode("utf-8", "replace")
+    # Spark's progress bar rewrites its line with \r: split on it too
+    tail = [ln.strip() for ln in (err or "").replace("\r", "\n").splitlines()]
+    tail = " / ".join([ln for ln in tail if ln][-5:])
+    print(f"# {name} FAILED ({why}): {tail}", file=sys.stderr)
+    return None
 
 
 _CONC_SCRIPT = r"""
@@ -447,44 +463,31 @@ def bench_ingest_concurrent(
     SAME HTTP+consumer-process transport — the scaling ratio is
     apples-to-apples within one JVM and one co-tenant window. Returns
     None on failure (a scale probe must never fail the whole bench)."""
-    import subprocess
-
     repo = os.path.dirname(os.path.abspath(__file__))
     script = _CONC_SCRIPT.format(
         repo=repo, sf_dir=sf_dir, n_conc=n_conc, trials=trials
     )
-    try:
-        out = subprocess.run(
-            [sys.executable, "-c", script],
-            capture_output=True,
-            text=True,
-            timeout=900,
-        )
-        for line in reversed(out.stdout.splitlines()):
-            if line.startswith("{"):
-                d = json.loads(line)
-                aggs = [float(v) for v in d["agg_runs"]]
-                singles = sorted(float(v) for v in d["single_http"])
-                scalings = [float(v) for v in d["scalings"]]
-                # Headline = the MEDIAN bracket-paired trial (r9 advice
-                # reverting r8's max-of-trials: a burst hitting only a
-                # trial's bracketing singles — not the trial itself —
-                # INFLATES that trial's ratio, so one-sided max
-                # selection can bias the headline upward). The max
-                # stays visible as the top of the reported band.
-                order = sorted(range(len(scalings)), key=lambda i: scalings[i])
-                med = order[len(order) // 2]
-                return {
-                    "runs": sorted(aggs),
-                    "agg_med": aggs[med],
-                    "single_http": singles[len(singles) // 2],
-                    "scalings": sorted(scalings),
-                    "scaling_med": scalings[med],
-                    "n_conc": n_conc,
-                }
+    d = _run_probe("concurrent probe", script, timeout=900)
+    if d is None:
         return None
-    except Exception:
-        return None
+    aggs = [float(v) for v in d["agg_runs"]]
+    singles = sorted(float(v) for v in d["single_http"])
+    scalings = [float(v) for v in d["scalings"]]
+    # Headline = the MEDIAN bracket-paired trial (r9 advice reverting
+    # r8's max-of-trials: a burst hitting only a trial's bracketing
+    # singles — not the trial itself — INFLATES that trial's ratio, so
+    # one-sided max selection can bias the headline upward). The max
+    # stays visible as the top of the reported band.
+    order = sorted(range(len(scalings)), key=lambda i: scalings[i])
+    med = order[len(order) // 2]
+    return {
+        "runs": sorted(aggs),
+        "agg_med": aggs[med],
+        "single_http": singles[len(singles) // 2],
+        "scalings": sorted(scalings),
+        "scaling_med": scalings[med],
+        "n_conc": n_conc,
+    }
 
 
 _SCALE_SCRIPT = r"""
@@ -493,7 +496,7 @@ sys.path.insert(0, {repo!r})
 from data_ingestion_pimcore_spark.session import get_spark
 from data_ingestion_pimcore_spark.config import IngestRequest
 from data_ingestion_pimcore_spark.pipeline import ingest, warm_ingest
-from data_ingestion_pimcore_spark.sink import PipelinedChunkValidator
+from data_ingestion_pimcore_spark.sink import ChunkValidator
 from data_ingestion_pimcore_spark.state import IngestionStateStore
 from pyspark.sql import functions as F
 
@@ -516,16 +519,13 @@ req = IngestRequest(
 )
 
 def run_once():
-    # headline protocol (r10): pipelined consumer, ordered commits
     state_dir = tempfile.mkdtemp(prefix="bench_scale_state_")
     state = IngestionStateStore(state_dir + "/state.parquet")
-    v = PipelinedChunkValidator(retain_records=False, workers=4, window=16)
     try:
         t0 = time.time()
-        s = ingest(spark, req, big, state, v)
+        s = ingest(spark, req, big, state, ChunkValidator(retain_records=False))
         dt = time.time() - t0
     finally:
-        v.close()
         shutil.rmtree(state_dir, ignore_errors=True)
     assert s.status == "COMPLETED", s
     return s.total_records / dt
@@ -577,7 +577,6 @@ def bench_ingest_scale(
     omitted) if the subprocess fails — a scale probe must never fail
     the whole bench."""
     import shutil
-    import subprocess
     import tempfile
 
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -592,27 +591,22 @@ def bench_ingest_scale(
         discard=1 if discard else 0,
     )
     try:
-        out = subprocess.run(
-            [sys.executable, "-c", script],
-            capture_output=True,
-            text=True,
-            # co-tenant bursts have stretched the 10x probe past 540 s;
-            # losing the metric costs more than the extra wait
+        # co-tenant bursts have stretched the 10x probe past 540 s;
+        # losing the metric costs more than the extra wait
+        d = _run_probe(
+            f"ingest_{factor}x probe",
+            script,
             timeout=900 if factor <= 10 else 1500,
         )
-        for line in reversed(out.stdout.splitlines()):
-            if line.startswith("{"):
-                d = json.loads(line)
-                return (
-                    sorted(float(v) for v in d["rps_runs"]),
-                    sorted(float(v) for v in d["ref_runs"]),
-                    sorted(float(v) for v in d["ratio_runs"]),
-                )
-        return None
-    except Exception:
-        return None
     finally:
         shutil.rmtree(big_dir, ignore_errors=True)
+    if d is None:
+        return None
+    return (
+        sorted(float(v) for v in d["rps_runs"]),
+        sorted(float(v) for v in d["ref_runs"]),
+        sorted(float(v) for v in d["ratio_runs"]),
+    )
 
 
 _SF1_SCRIPT = r"""
@@ -623,7 +617,7 @@ from data_ingestion_pimcore_spark.session import get_spark
 from data_ingestion_pimcore_spark import registry
 from data_ingestion_pimcore_spark.config import IngestRequest
 from data_ingestion_pimcore_spark.pipeline import ingest, warm_ingest
-from data_ingestion_pimcore_spark.sink import PipelinedChunkValidator
+from data_ingestion_pimcore_spark.sink import ChunkValidator
 from data_ingestion_pimcore_spark.state import IngestionStateStore
 from pyspark.sql import functions as F
 
@@ -729,9 +723,8 @@ req = IngestRequest(
     chunk_size_by_records=4000, re_ingestion=True,
     order_cols=("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
 t0 = time.time()
-_v = PipelinedChunkValidator(retain_records=False, workers=4, window=16)
-s = ingest(spark, req, li, IngestionStateStore(out + "/ingest_state/state.pq"), _v)
-_v.close()
+s = ingest(spark, req, li, IngestionStateStore(out + "/ingest_state/state.pq"),
+           ChunkValidator(retain_records=False))
 assert s.status == "COMPLETED", s
 ingest_sec = time.time() - t0
 refs.append(_bench._ref_loop_once(blob))
@@ -768,25 +761,13 @@ def bench_core_sf1(sf_dir: str) -> dict | None:
     Fresh subprocess JVM; None on failure — a scale probe must never
     fail the whole bench."""
     import shutil
-    import subprocess
     import tempfile
 
     repo = os.path.dirname(os.path.abspath(__file__))
     sf1_dir = tempfile.mkdtemp(prefix="bench_sf1_")
     script = _SF1_SCRIPT.format(repo=repo, sf_dir=sf_dir, sf1_dir=sf1_dir)
     try:
-        out = subprocess.run(
-            [sys.executable, "-c", script],
-            capture_output=True,
-            text=True,
-            timeout=1500,
-        )
-        for line in reversed(out.stdout.splitlines()):
-            if line.startswith("{"):
-                return json.loads(line)
-        return None
-    except Exception:
-        return None
+        return _run_probe("sf1 core-set probe", script, timeout=1500)
     finally:
         shutil.rmtree(sf1_dir, ignore_errors=True)
 
@@ -937,16 +918,17 @@ def main() -> None:
         _,
         ref_runs,
         ratios,
-        sync_rps,
     ) = bench_ingest_e2e(spark, sf_dir)
     timings["ingest_e2e"] = round(ingest_sec, 3)
     timings["ingest_e2e_cold"] = round(ingest_cold, 3)
-    timings["ingest_records_per_sec_sync"] = round(sync_rps, 1)
     # Median of 3 + min/max band (rps_runs comes back sorted): the
     # median is the headline; the band is what makes cross-round
     # regression detection possible on a ±40% co-tenant container —
     # a change is real only when the bands don't overlap.
     timings["ingest_records_per_sec"] = round(rps_runs[1], 1)
+    # The bench consumer is synchronous, so the _sync key equals the
+    # headline; it stays so that metric names do not change.
+    timings["ingest_records_per_sec_sync"] = timings["ingest_records_per_sec"]
     timings["ingest_records_per_sec_min"] = round(rps_runs[0], 1)
     timings["ingest_records_per_sec_max"] = round(rps_runs[-1], 1)
     # In-session bar (round-6 verdict item 2): the reference-equivalent

@@ -73,24 +73,17 @@ _LAST_PID_PATH: str | None = None
 
 
 # Rows per range for the data-scaled task width (_auto_ranges). 50k was
-# the CPU-parity point of the per-task-overhead table below; the
-# round-10 interleaved A/B (pipelined consumer, sf0.1, 600k rows)
-# re-measured the WALL optimum at 20k: 30-wide canonicalize read a
-# median 234k rec/s vs 166k at 12-wide — the ~5 extra core-s of per-task
-# setup buys 2.6x more parallel width on the dominant map stage. That
-# setup was the Python worker re-reading pyspark.zip on every task (see
-# worker_daemon), not the JVM, and is gone; both values were tuned
-# around it and have not been re-measured since. Inputs ≥ 1.6M rows hit
-# the shuffle-partition cap either way, so the 10x/100x probes are
-# unaffected; concurrent-ingest scaling re-verified after the change
-# (BASELINE.md r10). Env-overridable for A/Bs.
-def _rows_per_range_default() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_ROWS_PER_RANGE", "20000"))
-
-
-_ROWS_PER_RANGE = _rows_per_range_default()
+# the CPU-parity point of the per-task-overhead table in _auto_ranges;
+# a round-10 interleaved A/B (sf0.1, 600k rows) measured the WALL
+# optimum at 20k: 30-wide canonicalize read a median 234k rec/s vs 166k
+# at 12-wide — the ~5 extra core-s of per-task setup bought 2.6x more
+# parallel width on the dominant map stage. That setup was the Python
+# worker re-reading pyspark.zip on every task (see worker_daemon), not
+# the JVM, and is gone; the value was tuned around it and has not been
+# re-measured since. Inputs >= 1.6M rows hit the shuffle-partition cap
+# either way, so the 10x/100x probes are unaffected. To try another
+# value, change this constant and A/B the two git revisions.
+_ROWS_PER_RANGE = 20000
 
 
 def _rows_estimate(df: DataFrame) -> int | None:

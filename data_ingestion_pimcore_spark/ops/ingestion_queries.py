@@ -80,7 +80,6 @@ from ..integrity import (
     build_file_id,
     build_ingestion_id,
     canonical_string_col,
-    compute_checksum,
     sql_canonical_string,
 )
 from ..registry import register
@@ -1709,89 +1708,4 @@ def ingest_checksum_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").cast("long").alias("bucket"),
         F.col("n_a").cast("long").alias("n_a"),
         F.coalesce(F.col("n_b"), F.lit(0)).cast("long").alias("n_b"),
-    )
-
-
-@register(
-    "ingest_pipelined_parity",
-    oracle="""
-SELECT TRUE AS chunks_equal, TRUE AS order_equal, TRUE AS records_equal,
-       TRUE AS checksums_equal, TRUE AS completion_equal
-""",
-    doc="Driver-gated protocol-equivalence audit of the r10 pipelined "
-    "consumer (sink.PipelinedChunkValidator): the SAME source is "
-    "ingested twice — once through the synchronous single-thread "
-    "consumer, once through the windowed pipeline whose CV3 precompute "
-    "runs on a process pool behind strictly ordered commits — and the "
-    "two consumers' observed streams are compared chunk by chunk: "
-    "identical chunk sequences (gapless, in order), identical parsed "
-    "records, identical recomputed canonical checksums, identical "
-    "completion accounting. Reduced to five booleans the oracle "
-    "re-states as literals, so any divergence the windowing could "
-    "introduce (reorder, skip, double-commit, torn chunk) fails the "
-    "external hash gate — the same companion pattern as sim_recall_*. "
-    "Bounded work: one small-table ingest per protocol.",
-)
-def ingest_pipelined_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..config import IngestRequest
-    from ..pipeline import ingest
-    from ..sink import ChunkValidator, PipelinedChunkValidator
-    from ..state import IngestionStateStore
-
-    src = load(spark, sf_dir, "customer")
-    req = IngestRequest(
-        file_path=f"{sf_dir}/customer.parquet#parity",
-        file_type="parquet",
-        chunk_size_by_records=2000,
-        re_ingestion=True,
-        order_cols=("c_custkey",),
-    )
-
-    def run(validator):
-        state_dir = tempfile.mkdtemp(prefix="parity_state_")
-        try:
-            state = IngestionStateStore(f"{state_dir}/state.parquet")
-            s = ingest(spark, req, src, state, validator)
-        finally:
-            shutil.rmtree(state_dir, ignore_errors=True)
-        assert s.status == "COMPLETED", s
-        return s
-
-    v_sync = ChunkValidator()
-    s_sync = run(v_sync)
-    v_pipe = PipelinedChunkValidator(workers=2, window=8)
-    try:
-        s_pipe = run(v_pipe)
-    finally:
-        v_pipe.close()
-
-    n = s_sync.chunks_sent
-    chunks_equal = (
-        s_pipe.chunks_sent == n and v_sync.received_chunks == v_pipe.received_chunks
-    )
-    order_equal = v_sync.received_chunks == list(range(n))
-    records_equal = v_sync.received_records == v_pipe.received_records
-    checksums_equal = len(v_sync.received_records) == len(
-        v_pipe.received_records
-    ) and all(
-        compute_checksum(a) == compute_checksum(b)
-        for a, b in zip(v_sync.received_records, v_pipe.received_records)
-    )
-    completion_equal = (
-        len(v_sync.completed) == len(v_pipe.completed) == 1
-        and s_sync.total_records == s_pipe.total_records
-    )
-
-    def lit(b: bool) -> str:
-        return "TRUE" if b else "FALSE"
-
-    return spark.sql(
-        f"SELECT {lit(chunks_equal)} AS chunks_equal, "
-        f"{lit(order_equal)} AS order_equal, "
-        f"{lit(records_equal)} AS records_equal, "
-        f"{lit(checksums_equal)} AS checksums_equal, "
-        f"{lit(completion_equal)} AS completion_equal"
     )

@@ -17,9 +17,8 @@ Batch-mode equivalent of the reference's ``stream_and_push``
   ordering contract (CV2) demands it (SURVEY §4.3.2). Finished payloads
   stream to the driver via ``toLocalIterator`` in chunk order with
   O(one partition) driver memory, and ``deliver_payloads`` emits them
-  through one windowed, ACK-gated loop: a plain transport is its
-  ``window=1`` case, a pipelined consumer keeps several chunks in
-  flight, and commits are in order either way. Many ingestions
+  through one sequential, ACK-gated loop: send a chunk, wait for its
+  ACK (retrying a NACK), commit it, then send the next. Many ingestions
   parallelize across each other.
 
 Resume semantics are the *intended* ones (the Excel path's record-skip,
@@ -30,7 +29,6 @@ path's re-send bug (SURVEY §2.1 "Known reference bugs").
 from __future__ import annotations
 
 import hashlib
-from collections import deque
 from dataclasses import dataclass
 
 import pandas as pd
@@ -461,50 +459,30 @@ def deliver_payloads(
     driver-side fragment merge for the fused count-mode payload stream.
     Returns (chunks_sent, total_records).
 
-    One windowed loop serves every transport. A consumer exposing
-    ``submit``/``resolve`` (PipelinedChunkValidator) keeps up to its
-    ``pipeline_window`` chunks in flight so its pool overlaps their CV3
-    precompute; any other transport is the ``window=1`` case (submit is
-    the identity, resolve calls the transport). COMMITS — resolve(), K2
-    state update — happen strictly in submission order, one at a time.
-    A NACK at chunk i flushes everything in flight behind it (nothing
-    there was committed), spends the rest of the chunk's retry budget
-    in ``send_chunk_with_retry``, then resubmits the flushed tail in
-    order — so retry counts and no-false-progress are the same for
-    every transport.
+    One loop, one chunk in flight: each chunk goes through
+    ``send_chunk_with_retry`` (the ACK gate and its bounded retry), and
+    only an ACKed chunk commits its offset (K2) before the next is sent.
+    The loop holds one row back so that it knows which row is the last.
     """
-    if hasattr(transport, "submit"):
-        submit, resolve = transport.submit, transport.resolve
-        window = transport.pipeline_window
-    else:
-        submit, resolve, window = (lambda p: p), transport, 1
-    inflight: deque = deque()
     chunks_sent = 0
 
-    def enqueue(row, is_last: bool):
+    def deliver(row, is_last: bool):
+        nonlocal chunks_sent, total_records
         # The executor-serialized canonical blob passes through as-is;
         # parsing it is consumer-side work (an HTTP consumer parses the
         # POST body), so the sequential driver edge stays O(bytes-copy)
         # per chunk instead of O(parse + re-serialize).
-        payload = {
-            "ingestion_id": ingestion_id,
-            "chunk_number": row[CHUNK_COL],
-            "chunk_id": build_chunk_id(ingestion_id, row[CHUNK_COL]),
-            "checksum": row["checksum"],
-            "records_json": row["payload"],
-            "is_last": is_last,
-        }
-        inflight.append((row, payload, submit(payload)))
-
-    def commit_one():
-        nonlocal chunks_sent, total_records
-        row, payload, handle = inflight.popleft()
-        resp = resolve(handle)
-        if not resp.ack:
-            tail = [(r, p) for r, p, _ in inflight]
-            inflight.clear()
-            send_chunk_with_retry(transport, payload, first=resp)
-            inflight.extend((r, p, submit(p)) for r, p in tail)
+        send_chunk_with_retry(
+            transport,
+            {
+                "ingestion_id": ingestion_id,
+                "chunk_number": row[CHUNK_COL],
+                "chunk_id": build_chunk_id(ingestion_id, row[CHUNK_COL]),
+                "checksum": row["checksum"],
+                "records_json": row["payload"],
+                "is_last": is_last,
+            },
+        )
         total_records += row["n_records"]
         # K2: ACK-gated offset commit — no false progress.
         state.update_chunk(ingestion_id, row[CHUNK_COL], total_records)
@@ -516,14 +494,10 @@ def deliver_payloads(
     prev = None
     for row in rows:
         if prev is not None:
-            enqueue(prev, is_last=False)
-            if len(inflight) >= window:
-                commit_one()
+            deliver(prev, is_last=False)
         prev = row
     if prev is not None:
-        enqueue(prev, is_last=mark_last)
-    while inflight:
-        commit_one()
+        deliver(prev, is_last=mark_last)
     return chunks_sent, total_records
 
 

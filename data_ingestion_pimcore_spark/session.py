@@ -36,17 +36,6 @@ def get_spark(
     Respects an already-running session's master; otherwise uses
     ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``).
     """
-    # Pool start-method hook (r11 verdict item 4): when the CV3
-    # checksum pool is configured for forkserver, start the forkserver
-    # process NOW — before the JVM/py4j threads the session spawns
-    # exist — so every later pool worker forks from a clean,
-    # thread-free template and the fork-with-threads hazard (deadlock
-    # on a lock held at fork time; deprecated in CPython 3.14) never
-    # arises. A no-op when the server is already running.
-    if os.environ.get("SPARK_GRAFT_POOL_START_METHOD") == "forkserver":
-        from multiprocessing import forkserver
-
-        forkserver.ensure_running()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -15,11 +15,14 @@ and `tests/pim_core_mock_test/pim_core_mock_test.py:25-96`):
 * CV4 empty records → NACK "Empty chunk"
 * CV5 completion event resets + ACKs
 
-Transports are pluggable: the in-process validator for tests/bench, or
-any callable(payload) -> AckResponse (an HTTP POST in production).
-Ordering (CV2) makes the *send* inherently sequential per ingestion —
-compute parallelizes, the emit loop does not (SURVEY §4.3.2); many
-ingestions parallelize across each other.
+Transports are pluggable: the in-process ``ChunkValidator`` for
+tests/bench, ``HttpTransport`` in production, or any
+callable(payload) -> AckResponse. Ordering (CV2) makes the *send*
+inherently sequential per ingestion — compute parallelizes, the emit
+loop does not (SURVEY §4.3.2); many ingestions parallelize across each
+other. One chunk is in flight at a time: ``send_chunk_with_retry``, the
+only retry loop, calls the transport and waits for its answer before
+the caller commits the chunk and sends the next.
 """
 
 from __future__ import annotations
@@ -113,184 +116,14 @@ class ChunkValidator:
         return AckResponse(True, iid, n)
 
 
-def _precompute_chunk(records_json, retain: bool):
-    """The pure (state-free) part of chunk validation — orjson parse +
-    canonical re-dump + sha256 — extracted so a process pool can run it
-    for several in-flight chunks at once. Returns (n_records, computed
-    checksum, records-or-None). Module-level for pickling."""
-    records = _loads(records_json)
-    if not records:
-        return 0, "", None
-    return (
-        len(records),
-        compute_checksum(records),
-        records if retain else None,
-    )
-
-
-@dataclass
-class _PipelineHandle:
-    payload: dict
-    future: object | None  # None → resolve() takes the synchronous path
-
-
-class PipelinedChunkValidator(ChunkValidator):
-    """CV1–CV5-identical consumer whose EXPENSIVE validation step (the
-    CV3 parse + canonical re-dump + sha256) runs in a small process
-    pool over a window of in-flight chunks, while every state mutation
-    — the actual CV1/CV2/CV4/CV5 bookkeeping and the CV3 verdict —
-    happens strictly in submission order on the committing caller's
-    thread. ``pipeline.deliver_payloads`` is one windowed loop for
-    every transport: for this consumer it keeps ``pipeline_window``
-    chunks submitted and calls ``resolve`` in order; a NACK flushes the
-    uncommitted tail and hands the chunk to ``send_chunk_with_retry``
-    for the rest of its attempts through ``__call__``.
-
-    This is consumer-side design headroom, not a contract change: CV2
-    orders COMMITS, and commits here are exactly as ordered as the
-    synchronous validator's — a NACK at chunk i leaves chunks > i
-    uncommitted (their precompute results are discarded without
-    touching state). A real deployment shape: the consumer service
-    checksums on N cores behind an ordered commit stage, lifting the
-    single-thread ~185k rec/s validation ceiling (BASELINE.md) by ~the
-    worker count. Synchronous calls (``__call__``) still work — the
-    completion handshake, dict test payloads, and the producer's
-    bounded retry fallback all use them."""
-
-    def __init__(self, workers: int = 4, window: int | None = None, **kw):
-        super().__init__(**kw)
-        import multiprocessing
-        import os
-        from concurrent.futures import ProcessPoolExecutor
-
-        # fork context by DEFAULT — a deliberate trade-off (r10 advice
-        # evaluated): forking a driver that hosts py4j/JVM threads
-        # risks a child deadlocking on a lock held at fork time
-        # (malloc/logging), and fork-with-threads is deprecated toward
-        # CPython 3.14. BUT the alternatives are worse as a library
-        # default: forkserver and spawn both re-import the caller's
-        # __main__ in every worker (spawn.get_preparation_data ships
-        # main_path for plain `python script.py` entrypoints), so an
-        # unguarded driver script — bench harnesses, notebook exports,
-        # the external driver — would re-execute wholesale inside each
-        # worker (measured: instant BrokenProcessPool via the bootstrap
-        # guard when the caller builds pools/Spark at module level).
-        # Exposure is contained instead: workers run ONLY the pure
-        # precompute (_precompute_chunk: orjson loads + sha256 — no
-        # JVM, py4j, logging, or locks), are spawned eagerly right
-        # after pool creation (before heavy driver activity widens the
-        # forked-lock window), and a worker death surfaces as
-        # BrokenProcessPool on resolve(), which the producer's bounded
-        # retry converts into the synchronous fallback path rather
-        # than a hang.
-        #
-        # GUARDED opt-out (r11 verdict item 4): callers whose entry
-        # script IS import-guarded (`if __name__ == "__main__":`) can
-        # set SPARK_GRAFT_POOL_START_METHOD=forkserver|spawn to drop
-        # the fork-with-threads hazard entirely — with forkserver,
-        # session.get_spark pre-starts the server BEFORE any JVM/py4j
-        # threads exist, so workers fork from a clean template. The
-        # same degrade-to-sync containment applies under every method:
-        # a mis-set flag on an unguarded script breaks the pool, and
-        # delivery falls back to the synchronous path instead of
-        # failing the ingestion.
-        method = os.environ.get("SPARK_GRAFT_POOL_START_METHOD", "fork")
-        self._pool = ProcessPoolExecutor(
-            max_workers=workers, mp_context=multiprocessing.get_context(method)
-        )
-        # eager spawn: worker startup overlaps the producer's scan /
-        # first-batch compute instead of the first chunk's latency
-        for _ in range(workers):
-            self._pool.submit(int)
-        self.pipeline_window = window or 2 * workers
-        # GC/interp-exit safety net for callers that skip close():
-        # cancel pending precomputes instead of blocking atexit on them
-        import functools
-        import weakref
-
-        self._finalizer = weakref.finalize(
-            self,
-            functools.partial(
-                type(self._pool).shutdown,
-                self._pool,
-                wait=False,
-                cancel_futures=True,
-            ),
-        )
-
-    def submit(self, payload: dict) -> _PipelineHandle:
-        rj = payload.get("records_json")
-        if payload.get("status") == "COMPLETED" or rj is None:
-            return _PipelineHandle(payload, None)
-        try:
-            fut = self._pool.submit(_precompute_chunk, rj, self.retain_records)
-        except RuntimeError:
-            # BrokenProcessPool (a worker died) or pool shut down:
-            # degrade to the synchronous path — same validation, no
-            # precompute overlap — instead of failing the ingestion
-            return _PipelineHandle(payload, None)
-        return _PipelineHandle(payload, fut)
-
-    def resolve(self, handle: _PipelineHandle) -> AckResponse:
-        """In-order commit of a submitted chunk. MUST be called in
-        submission order — the caller's window loop guarantees it."""
-        if handle.future is None:
-            return self(handle.payload)
-        payload = handle.payload
-        iid = payload["ingestion_id"]
-        n = payload["chunk_number"]
-        if n in self.reject_once:
-            self.reject_once.discard(n)
-            return AckResponse(False, iid, n, "SIMULATED_FAILURE")
-        try:
-            n_records, computed, records = handle.future.result()
-        except Exception:
-            # Worker death mid-precompute (BrokenProcessPool): the
-            # precompute is PURE, so nothing was lost — revalidate this
-            # chunk synchronously (identical CV1–CV5 semantics); later
-            # submits see the broken pool and degrade to sync too.
-            return self(handle.payload)
-        if not n_records:
-            return AckResponse(False, iid, n, ERR_EMPTY)  # CV4
-        if payload["chunk_id"] in self.processed_chunks:
-            return AckResponse(True, iid, n)  # CV1 idempotent replay
-        if n != self.last_chunk.get(iid, -1) + 1:
-            return AckResponse(False, iid, n, ERR_OUT_OF_ORDER)  # CV2
-        if computed != payload["checksum"]:
-            return AckResponse(False, iid, n, ERR_CHECKSUM)  # CV3
-        self.processed_chunks.add(payload["chunk_id"])
-        self.last_chunk[iid] = n
-        self.received_chunks.append(n)
-        if self.retain_records:
-            self.received_records.append(records)
-        self.total_records[iid] = self.total_records.get(iid, 0) + n_records
-        return AckResponse(True, iid, n)
-
-    def close(self):
-        self._finalizer.detach()
-        self._pool.shutdown(wait=False, cancel_futures=True)
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()
-
-
 Transport = Callable[[dict], AckResponse]
 
 
-def send_chunk_with_retry(
-    transport: Transport, payload: dict, first: AckResponse | None = None
-) -> AckResponse:
+def send_chunk_with_retry(transport: Transport, payload: dict) -> AckResponse:
     """At-least-once delivery with bounded retry; ACK gate, not HTTP
     status, decides success (json_reader.py:163-196; README:345-362).
-
-    ``first`` is the response to an attempt the caller already made (the
-    windowed delivery loop's ``resolve``); it counts against the
-    MAX_ATTEMPTS budget, so a chunk is tried MAX_ATTEMPTS times in all
-    on every delivery path."""
-    resp = transport(payload) if first is None else first
+    A chunk is tried at most MAX_ATTEMPTS times."""
+    resp = transport(payload)
     attempts = 1
     while not resp.ack:
         if attempts == MAX_ATTEMPTS:

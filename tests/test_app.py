@@ -9,6 +9,13 @@ from data_ingestion_pimcore_spark.state import IngestionStateStore
 
 SF = "/root/testdata/sf0.001"
 
+_PAYLOAD = {
+    "file_path": f"{SF}/lineitem.parquet",
+    "file_type": "parquet",
+    "chunk_size_by_records": 2000,
+    "order_cols": ("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
+}
+
 
 def _svc(spark, tmp_path, v):
     return IngestionService(
@@ -22,14 +29,7 @@ def test_ingest_started_then_completed(spark, tmp_path):
     v = ChunkValidator()
     svc = _svc(spark, tmp_path, v)
     assert svc.health() == {"status": "ok"}
-    resp = svc.ingest(
-        {
-            "file_path": f"{SF}/lineitem.parquet",
-            "file_type": "parquet",
-            "chunk_size_by_records": 2000,
-            "order_cols": ("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-        }
-    )
+    resp = svc.ingest(_PAYLOAD)
     # immediate STARTED reply, work continues in the background
     assert resp["status"] == "STARTED" and resp["ingestion_id"]
     final = svc.wait(resp["ingestion_id"], timeout=300)
@@ -89,18 +89,58 @@ def test_ingest_failure_reported_not_raised(spark, tmp_path):
         IngestionStateStore(str(tmp_path / "state.pq")),
         inprocess_transports={"inprocess://validator": always_reject_chunk1},
     )
-    resp = svc.ingest(
-        {
-            "file_path": f"{SF}/lineitem.parquet",
-            "file_type": "parquet",
-            "chunk_size_by_records": 2000,
-            "order_cols": ("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-        }
-    )
+    resp = svc.ingest(_PAYLOAD)
     final = svc.wait(resp["ingestion_id"], timeout=300)
     assert final["status"] == "IN_PROGRESS"  # never falsely COMPLETED
     assert "rejected after 3 attempts" in final["error"]
     assert final["last_chunk"] == 0  # chunk 0 ACKed, chunk 1 never committed
+
+
+def _held_service(spark, tmp_path, monkeypatch):
+    """A service whose in-process consumer holds chunk 0 until
+    ``h.release`` is set. ``h`` records the run_ingestion calls, the
+    chunk-0 deliveries and every consumer response."""
+    import threading
+    from types import SimpleNamespace
+
+    from data_ingestion_pimcore_spark import app
+
+    h = SimpleNamespace(
+        v=ChunkValidator(),
+        runs=[],
+        chunk0_deliveries=[],
+        responses=[],
+        arrived=threading.Event(),
+        release=threading.Event(),
+    )
+    real_run = app.run_ingestion
+
+    def counting_run(*a, **kw):
+        h.runs.append(threading.current_thread().name)
+        return real_run(*a, **kw)
+
+    monkeypatch.setattr(app, "run_ingestion", counting_run)
+
+    def gated(payload):
+        if payload.get("status") != "COMPLETED" and payload["chunk_number"] == 0:
+            h.chunk0_deliveries.append(1)
+            h.arrived.set()
+            h.release.wait(60)
+        resp = h.v(payload)
+        h.responses.append(resp)
+        return resp
+
+    return _svc(spark, tmp_path, gated), h
+
+
+def _assert_joined_once(h, iid):
+    from data_ingestion_pimcore_spark.sink import ERR_OUT_OF_ORDER
+
+    assert len(h.runs) == 1
+    assert len(h.chunk0_deliveries) == 1
+    assert h.v.received_chunks == list(range(3))
+    assert not any(r.error == ERR_OUT_OF_ORDER for r in h.responses)
+    assert h.v.completed == [iid]
 
 
 def test_duplicate_dispatch_joins_running_execution(spark, tmp_path, monkeypatch):
@@ -108,56 +148,73 @@ def test_duplicate_dispatch_joins_running_execution(spark, tmp_path, monkeypatch
     same STARTED reply, no second drain. The transport holds chunk 0
     until the duplicate POST has been answered, so the first execution
     is live when the duplicate arrives."""
-    import threading
-
-    from data_ingestion_pimcore_spark import app
-    from data_ingestion_pimcore_spark.sink import ERR_OUT_OF_ORDER
-
-    runs = []
-    real_run = app.run_ingestion
-
-    def counting_run(*a, **kw):
-        runs.append(threading.current_thread().name)
-        return real_run(*a, **kw)
-
-    monkeypatch.setattr(app, "run_ingestion", counting_run)
-
-    v = ChunkValidator()
-    arrived, release = threading.Event(), threading.Event()
-    chunk0_deliveries, responses = [], []
-
-    def gated(payload):
-        if payload.get("status") != "COMPLETED" and payload["chunk_number"] == 0:
-            chunk0_deliveries.append(1)
-            arrived.set()
-            release.wait(60)
-        resp = v(payload)
-        responses.append(resp)
-        return resp
-
-    svc = IngestionService(
-        spark,
-        IngestionStateStore(str(tmp_path / "state.pq")),
-        inprocess_transports={"inprocess://validator": gated},
-    )
-    payload = {
-        "file_path": f"{SF}/lineitem.parquet",
-        "file_type": "parquet",
-        "chunk_size_by_records": 2000,
-        "order_cols": ("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-    }
-    first = svc.ingest(payload)
-    assert arrived.wait(120)
-    second = svc.ingest(payload)
+    svc, h = _held_service(spark, tmp_path, monkeypatch)
+    first = svc.ingest(_PAYLOAD)
+    assert h.arrived.wait(120)
+    second = svc.ingest(_PAYLOAD)
     assert second == first == {
         "status": "STARTED",
         "ingestion_id": first["ingestion_id"],
     }
-    release.set()
+    h.release.set()
     final = svc.wait(first["ingestion_id"], timeout=300)
     assert final["status"] == "COMPLETED" and final["error"] is None
-    assert len(runs) == 1
-    assert len(chunk0_deliveries) == 1
-    assert v.received_chunks == list(range(3))
-    assert not any(r.error == ERR_OUT_OF_ORDER for r in responses)
-    assert v.completed == [first["ingestion_id"]]
+    _assert_joined_once(h, first["ingestion_id"])
+
+
+def test_duplicate_http_dispatch_joins_running_execution(
+    spark, tmp_path, monkeypatch
+):
+    """The same join, over the wire: two ``POST /api/ingest`` for one
+    ingestion_id through the HTTP shell while chunk 0 is held get the
+    same STARTED reply, one execution runs, and ``/api/status`` ends
+    COMPLETED."""
+    import json
+    import logging
+    import urllib.request
+
+    from data_ingestion_pimcore_spark.http_app import start_http_app
+
+    loggers = [
+        logging.getLogger(f"data_ingestion_pimcore_spark.{k}")
+        for k in ("info", "error", "debug")
+    ]
+    for lg in loggers:
+        lg.handlers.clear()
+    monkeypatch.setenv("SPARK_GRAFT_LOG_DIR", str(tmp_path / "logs"))
+
+    svc, h = _held_service(spark, tmp_path, monkeypatch)
+    srv, _t, port = start_http_app(svc)
+    base = f"http://127.0.0.1:{port}"
+
+    def post() -> dict:
+        body = json.dumps(_PAYLOAD).encode()
+        req = urllib.request.Request(
+            f"{base}/api/ingest",
+            data=body,
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req, timeout=60) as r:
+            return json.loads(r.read())
+
+    try:
+        first = post()
+        assert h.arrived.wait(120)
+        second = post()
+        assert second == first == {
+            "status": "STARTED",
+            "ingestion_id": first["ingestion_id"],
+        }
+        h.release.set()
+        iid = first["ingestion_id"]
+        svc.wait(iid, timeout=300)
+        with urllib.request.urlopen(f"{base}/api/status/{iid}", timeout=60) as r:
+            st = json.loads(r.read())
+        assert st["status"] == "COMPLETED"
+        assert st["total_records"] == 6000
+        _assert_joined_once(h, iid)
+    finally:
+        h.release.set()
+        srv.shutdown()
+        for lg in loggers:
+            lg.handlers.clear()

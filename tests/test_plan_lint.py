@@ -44,7 +44,6 @@ MATERIALIZED_EXEMPT = {
     "graph_bfs_hops",
     "graph_pagerank",
     "ingest_backfill_partition",
-    "ingest_pipelined_parity",
     "ingest_incremental_files",
     "ingest_integrity_chain",
     "join_bucketed_colocated",

@@ -1705,19 +1705,3 @@ def test_ann_recall_companions_emit_expected_literals(spark):
             r["method"], r["k"], r["recall_den"],
             r["meets_floor"], r["scores_exact"],
         ) == (method, 5, 50, True, True), (name, r)
-
-
-def test_ingest_pipelined_parity_all_true(spark):
-    """The protocol-equivalence audit must emit exactly the all-TRUE
-    row its oracle states — the repo-local twin of the driver gate.
-    (The returned plan is a literal one-row relation; the audited work
-    runs during fn() and is covered by the pipelined contract tests.)"""
-    from data_ingestion_pimcore_spark import registry
-
-    rows = registry.all_queries()["ingest_pipelined_parity"].fn(spark, SF).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (
-        r["chunks_equal"], r["order_equal"], r["records_equal"],
-        r["checksums_equal"], r["completion_equal"],
-    ) == (True, True, True, True, True)

@@ -52,12 +52,22 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
         .json(str(landing))
     )
     v = ChunkValidator()
+    is_last = []
+
+    def transport(payload):
+        if payload.get("status") != "COMPLETED":
+            is_last.append(payload["is_last"])
+        return v(payload)
+
     state = IngestionStateStore(str(tmp_path / "state.pq"))
     s = stream_ingest(
-        spark, _req(landing), stream, state, v, str(tmp_path / "ckpt")
+        spark, _req(landing), stream, state, transport, str(tmp_path / "ckpt")
     )
     assert s.status == "COMPLETED"
     assert s.total_records == 50
+    # a micro-batch never knows it is the last one: the completion event
+    # ends the stream, and no chunk carries is_last
+    assert is_last == [False] * 6
     # chunk numbers strictly sequential ACROSS micro-batches (CV2 held)
     assert v.received_chunks == list(range(len(v.received_chunks)))
     # each batch had 25 rows at size 10 → 3+3 chunks, partial at batch end

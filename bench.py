@@ -318,6 +318,35 @@ def bench_ingest_e2e(
     return dt, cold, rps, total, sorted(ref_runs), sorted(ratios)
 
 
+# Subprocess timeouts of the heavy probes, in the order main() runs
+# them. A probe starts, and a loaded probe is re-run, only while the
+# budget left covers its own timeout plus the gates of the probes still
+# to run — so a probe that runs to its timeout cannot push out a later
+# one. With the default 3600 s budget that skips the concurrent and 10x
+# probes (gates 4800 s and 3900 s); raise SPARK_GRAFT_BENCH_BUDGET_S for
+# the full series.
+_PROBE_TIMEOUT_S = {
+    "concurrent": 900,
+    "ingest_10x": 900,
+    "ingest_100x": 1500,
+    "sf1 core-set": 1500,
+}
+_PROBE_GATE_S = {
+    name: sum(list(_PROBE_TIMEOUT_S.values())[i:])
+    for i, name in enumerate(_PROBE_TIMEOUT_S)
+}
+
+
+def _gated_probe(name: str, remaining: float, run):
+    """``run()`` when ``remaining`` seconds of budget exceed ``name``'s
+    gate; otherwise print ``# <name> probe SKIPPED (wall budget)`` and
+    return None."""
+    if remaining > _PROBE_GATE_S[name]:
+        return run()
+    print(f"# {name} probe SKIPPED (wall budget)", file=sys.stderr)
+    return None
+
+
 def _run_probe(name: str, script: str, timeout: float) -> dict | None:
     """Run a probe script in a fresh interpreter and return the last JSON
     object it printed. A probe that dies, times out or prints no result
@@ -467,7 +496,9 @@ def bench_ingest_concurrent(
     script = _CONC_SCRIPT.format(
         repo=repo, sf_dir=sf_dir, n_conc=n_conc, trials=trials
     )
-    d = _run_probe("concurrent probe", script, timeout=900)
+    d = _run_probe(
+        "concurrent probe", script, timeout=_PROBE_TIMEOUT_S["concurrent"]
+    )
     if d is None:
         return None
     aggs = [float(v) for v in d["agg_runs"]]
@@ -596,7 +627,7 @@ def bench_ingest_scale(
         d = _run_probe(
             f"ingest_{factor}x probe",
             script,
-            timeout=900 if factor <= 10 else 1500,
+            timeout=_PROBE_TIMEOUT_S["ingest_10x" if factor <= 10 else "ingest_100x"],
         )
     finally:
         shutil.rmtree(big_dir, ignore_errors=True)
@@ -767,7 +798,9 @@ def bench_core_sf1(sf_dir: str) -> dict | None:
     sf1_dir = tempfile.mkdtemp(prefix="bench_sf1_")
     script = _SF1_SCRIPT.format(repo=repo, sf_dir=sf_dir, sf1_dir=sf1_dir)
     try:
-        return _run_probe("sf1 core-set probe", script, timeout=1500)
+        return _run_probe(
+            "sf1 core-set probe", script, timeout=_PROBE_TIMEOUT_S["sf1 core-set"]
+        )
     finally:
         shutil.rmtree(sf1_dir, ignore_errors=True)
 
@@ -864,8 +897,8 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Soft wall budget: the scale probes are individually optional, and
     # an external kill loses the WHOLE artifact (the driver parses the
-    # tail of stdout) — so each heavy probe is skipped unless enough
-    # budget remains for it plus the closing query passes.
+    # tail of stdout) — so each heavy probe is skipped unless the budget
+    # left covers its timeout plus the later probes' (_PROBE_GATE_S).
     t_start = time.time()
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "3600"))
 
@@ -964,9 +997,9 @@ def main() -> None:
     timings["load_index"] = round(REF_LOOP_QUIET_RPS / timings["ref_loop_rps"], 3)
     print(f"# load_index: {timings['load_index']:.2f} (1.0 = quiet window)",
           file=sys.stderr)
-    conc = bench_ingest_concurrent(sf_dir) if _remaining() > 2700 else None
-    if conc is None and _remaining() <= 2700:
-        print("# concurrent probe SKIPPED (wall budget)", file=sys.stderr)
+    conc = _gated_probe(
+        "concurrent", _remaining(), lambda: bench_ingest_concurrent(sf_dir)
+    )
     if conc is not None:
         # Headline = the MEDIAN bracket-paired trial (r9 advice); the
         # band top carries the max.
@@ -1014,7 +1047,8 @@ def main() -> None:
     def _probe_spread(rps_sorted: list[float]) -> float:
         return round(rps_sorted[-1] / max(rps_sorted[0], 1e-9), 3)
 
-    def _quiet_scale_probe(factor, n_runs, discard, budget_floor):
+    def _quiet_scale_probe(factor, n_runs, discard):
+        budget_floor = _PROBE_GATE_S[f"ingest_{factor}x"]
         probe = bench_ingest_scale(
             sf_dir, factor=factor, n_runs=n_runs, discard=discard
         )
@@ -1042,13 +1076,9 @@ def main() -> None:
             return retry, load2, True
         return probe, load, True
 
-    rps10, load10, retried10 = (
-        _quiet_scale_probe(10, 3, True, budget_floor=2400)
-        if _remaining() > 2400
-        else (None, None, False)
-    )
-    if rps10 is None and _remaining() <= 2400:
-        print("# ingest_10x probe SKIPPED (wall budget)", file=sys.stderr)
+    rps10, load10, retried10 = _gated_probe(
+        "ingest_10x", _remaining(), lambda: _quiet_scale_probe(10, 3, True)
+    ) or (None, None, False)
     if rps10 is not None:
         runs10, ref10, ratio10 = rps10
         timings["ingest_records_per_sec_10x"] = round(runs10[1], 1)
@@ -1082,13 +1112,9 @@ def main() -> None:
             file=sys.stderr,
         )
     _checkpoint()
-    rps100, load100, retried100 = (
-        _quiet_scale_probe(100, 2, False, budget_floor=1800)
-        if _remaining() > 1800
-        else (None, None, False)
-    )
-    if rps100 is None and _remaining() <= 1800:
-        print("# ingest_100x probe SKIPPED (wall budget)", file=sys.stderr)
+    rps100, load100, retried100 = _gated_probe(
+        "ingest_100x", _remaining(), lambda: _quiet_scale_probe(100, 2, False)
+    ) or (None, None, False)
     if rps100 is not None:
         runs100, ref100, ratio100 = rps100
         timings["ingest_records_per_sec_100x"] = round(runs100[-1], 1)
@@ -1105,9 +1131,7 @@ def main() -> None:
             file=sys.stderr,
         )
     _checkpoint()
-    sf1 = bench_core_sf1(sf_dir) if _remaining() > 1200 else None
-    if sf1 is None and _remaining() <= 1200:
-        print("# sf1 core-set probe SKIPPED (wall budget)", file=sys.stderr)
+    sf1 = _gated_probe("sf1 core-set", _remaining(), lambda: bench_core_sf1(sf_dir))
     if sf1 is not None:
         timings["core_total_sec_sf1"] = sf1["core_total_sec_sf1"]
         timings["ingest_records_per_sec_sf1"] = sf1["ingest_rps_sf1"]

@@ -668,17 +668,30 @@ def assign_chunks_by_count(
     pid_cols: list[str] | None = None,
     stats_out: dict | None = None,
     rn_col: str | None = None,
+    len_col: str | None = None,
 ) -> DataFrame:
     """chunk_number = floor((global_rn - 1) / chunk_size), 0-based chunks
     in total order (reference count-mode C1). ``rn_col`` keeps the
     1-based global row number under that name (record-level resume
-    filters on it)."""
+    filters on it); ``len_col`` adds the row's chunk length (the payload
+    builder's completeness test). ``stats_out`` receives ``n_rows`` and
+    ``n_chunks``."""
+    stats = {} if stats_out is None else stats_out
     withrn = global_row_number(
-        df, order_cols, _RN, num_partitions, pid_cols, stats_out=stats_out
+        df, order_cols, _RN, num_partitions, pid_cols, stats_out=stats
     )
+    stats["n_chunks"] = -(-stats["n_rows"] // chunk_size)
     out = withrn.withColumn(
         CHUNK_COL, F.floor((F.col(_RN) - 1) / chunk_size).cast("long")
     )
+    if len_col:
+        out = out.withColumn(
+            len_col,
+            F.least(
+                F.lit(chunk_size).cast("long"),
+                F.lit(stats["n_rows"]) - F.col(CHUNK_COL) * chunk_size,
+            ),
+        )
     return out.withColumnRenamed(_RN, rn_col) if rn_col else out.drop(_RN)
 
 
@@ -696,6 +709,7 @@ def assign_chunks_by_bytes(
     rn_col: str | None = None,
     size_expr: Column | None = None,
     max_records: int | None = None,
+    len_col: str | None = None,
 ) -> DataFrame:
     """Greedy byte-budget chunking (reference byte-mode C1, strict
     pre-append check): a chunk is flushed *before* a record that would
@@ -729,7 +743,9 @@ def assign_chunks_by_bytes(
     ``offset + #(starts <= rn) - 1``. Driver state stays O(#epochs).
 
     Adds ``record_bytes`` (canonical serialized size, C2) unless
-    ``size_col`` names an existing column.
+    ``size_col`` names an existing column. ``rn_col`` and ``len_col``
+    work as in ``assign_chunks_by_count``; the chunk length comes from
+    the chase's per-chunk ``__n_records``, broadcast with the starts.
     """
     withrn, bounds, offsets = _byte_chunk_bounds(
         df,
@@ -743,9 +759,15 @@ def assign_chunks_by_bytes(
         max_records,
     )
     epoch = F.floor((F.col(_RN) - 1) / F.lit(int(epoch_rows))).cast("long")
+    chunks = F.array_sort(F.collect_list(F.struct("__start_rn", "__n_records")))
     starts_df = (
         bounds.groupBy(_PID)
-        .agg(F.array_sort(F.collect_list("__start_rn")).alias("__starts"))
+        .agg(chunks.alias("__chunks"))
+        .select(
+            _PID,
+            F.col("__chunks.__start_rn").alias("__starts"),
+            F.col("__chunks.__n_records").alias("__lens"),
+        )
         .join(offsets, _PID)
     )
     # Pass 2 — pure-JVM assignment: broadcast the per-epoch start
@@ -756,8 +778,11 @@ def assign_chunks_by_bytes(
         withrn.withColumn(_PID, epoch)
         .join(F.broadcast(starts_df), _PID)
         .withColumn(CHUNK_COL, (F.col("__offset") + local_chunk).cast("long"))
-        .drop(_PID, "__offset", "__starts")
     )
+    if len_col:
+        local = F.col(CHUNK_COL) - F.col("__offset") + 1
+        out = out.withColumn(len_col, F.element_at("__lens", local.cast("int")))
+    out = out.drop(_PID, "__offset", "__starts", "__lens")
     return out.withColumnRenamed(_RN, rn_col) if rn_col else out.drop(_RN)
 
 

@@ -10,9 +10,9 @@ Batch-mode equivalent of the reference's ``stream_and_push``
   DataFrame predicate, so Catalyst prunes already-ACKed chunks *before*
   the expensive work on re-runs.
 * Chunks serialize in executors through one serializer (``_records``
-  → ``_seal``: canonical JSON + SHA-256) with one builder per chunking
-  mode: ``_chunk_payloads_fused`` for count mode, and
-  ``_chunk_payloads_local`` for byte mode and streaming micro-batches.
+  → ``_seal``: canonical JSON + SHA-256) and one builder,
+  ``_chunk_payloads``, for count mode, byte mode and streaming
+  micro-batches: each chunk seals in the task that holds its rows.
 * Only the network emit is sequential per ingestion — the consumer's
   ordering contract (CV2) demands it (SURVEY §4.3.2). Finished payloads
   stream to the driver via ``toLocalIterator`` in chunk order with
@@ -132,76 +132,46 @@ def _ts_column_strings(s: pd.Series) -> list | None:
     return vals
 
 
-def _chunk_payloads_local(
-    pending: DataFrame, record_cols: list[str], order_cols: list[str]
+_RESUME_RN = "__resume_rn"
+_CHUNK_LEN = "__chunk_len"
+
+# Drain-layout granularity: chunks per toLocalIterator partition (one
+# drain job each). See the sizing comment in _chunk_payloads.
+CHUNKS_PER_DRAIN_PART = 16
+
+
+def _chunk_payloads(
+    pending: DataFrame, record_cols: list[str], n_chunks: int
 ) -> DataFrame:
-    """Payload builder for chunks whose rows the caller co-located by
-    hash-partitioning ``pending`` on ``chunk_number`` (byte-mode batch
-    ingests and streaming micro-batches): every chunk's rows sit in one
-    task, so payloads build in place (AQE may merge whole partitions,
-    which preserves the property; resume filters drop rows, never split
-    a chunk across tasks). Any violation of the co-location assumption
-    would surface as a CV3 checksum NACK at delivery, not silent
-    corruption.
-    """
+    """The payload builder, for both chunking modes and for streaming
+    micro-batches.
 
-    def run(batches):
-        bufs: dict[int, list[pd.DataFrame]] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for c, g in pdf.groupby(CHUNK_COL, sort=False):
-                bufs.setdefault(int(c), []).append(g)
-        out = []
-        for c, frames in sorted(bufs.items()):
-            g = pd.concat(frames) if len(frames) > 1 else frames[0]
-            g = g.sort_values(order_cols, kind="mergesort")
-            out.append(_seal(c, _records(g, record_cols)))
-        if out:
-            yield pd.DataFrame(out, columns=_PAYLOAD_COLS)
-
-    return pending.mapInPandas(run, schema=_PAYLOAD_SCHEMA)
-
-
-def _chunk_payloads_fused(
-    pending: DataFrame,
-    record_cols: list[str],
-    rn_col: str,
-    chunk_size: int,
-    n_rows: int,
-    n_parts: int,
-) -> DataFrame:
-    """Shuffle-light payload builder for COUNT-mode chunks.
-
-    Chunk membership is a closed formula of the global row number
-    (rows ``[c·size+1, min((c+1)·size, n_rows)]``), so a task that
-    holds ALL of a chunk's rows serializes + hashes it locally in the
-    ordering stage itself — no full-record shuffle on chunk_number
-    (the byte-mode shape) is needed. Only chunks straddling a partition border (≤ 2
-    per task) emit fragments: per-row canonical JSON, merged in the
-    drain's range-partition pass (which the delivery layout needed
-    anyway, and which co-locates a chunk's fragments by construction).
-    ``canonical_dumps`` of a list is exactly ``[`` + ``,``-joined
-    element dumps + ``]`` (compact separators, both orjson and the
-    stdlib fallback), so fragment concatenation is byte-identical to
-    whole-chunk serialization — the consumer's CV3 re-hash verifies
+    ``pending`` is ``_chunked`` output (possibly resume-filtered): each
+    row carries its chunk, its global row number ``_RESUME_RN`` and its
+    chunk's length ``_CHUNK_LEN``. A task whose rows of chunk ``c``
+    number ``_CHUNK_LEN`` holds ALL of ``c``, so it serializes + hashes
+    it locally in the ordering stage itself — no full-record shuffle on
+    chunk_number is needed. Only chunks straddling a task border emit
+    fragments: per-row canonical JSON, merged on the driver in
+    ``deliver_payloads`` after the drain exchange (which the delivery
+    layout needed anyway, and which co-locates a chunk's fragments by
+    construction). ``canonical_dumps`` of a list is exactly ``[`` +
+    ``,``-joined element dumps + ``]`` (compact separators, both orjson
+    and the stdlib fallback), so fragment concatenation is byte-identical
+    to whole-chunk serialization — the consumer's CV3 re-hash verifies
     this on every delivery.
 
     At 100 TB each record crosses the network ONCE (the ordering
     exchange) plus its finished payload bytes once (the drain layout
-    exchange), instead of twice + payload. Partial chunks from resume
-    filters route through the fragment path automatically (their
-    in-task count never matches the formula). Returns payloads already
-    range-partitioned and sorted by chunk — the drain consumes them
+    exchange). Partial chunks from record-level resume filters route
+    through the fragment path automatically (their in-task count never
+    reaches the chunk length). Returns payloads in ``n_chunks``-dense
+    ascending partitions, sorted by chunk — the drain consumes them
     directly.
     """
 
     out_cols = [*_PAYLOAD_COLS, "complete", "first_rn"]
     out_schema = f"{_PAYLOAD_SCHEMA}, complete boolean, first_rn long"
-
-    def expected(c: int) -> int:
-        hi = min((c + 1) * chunk_size, n_rows)
-        return hi - c * chunk_size
 
     # open_chunks: c -> list of (rn_list, records) slices seen so far
     # in THIS task. NOTE the range-id exchange is a HASH partitioning,
@@ -239,12 +209,12 @@ def _chunk_payloads_fused(
             # loop variant measured ~70% slower at sf0.1
             for c, g in pdf.groupby(CHUNK_COL, sort=False):
                 c = int(c)
-                g = g.sort_values(rn_col, kind="mergesort")
+                g = g.sort_values(_RESUME_RN, kind="mergesort")
                 recs = _records(g, record_cols)
                 buf = open_chunks.setdefault(c, [])
-                buf.append((g[rn_col].tolist(), recs))
+                buf.append((g[_RESUME_RN].tolist(), recs))
                 counts[c] = counts.get(c, 0) + len(recs)
-                if counts[c] == expected(c):
+                if counts[c] == g[_CHUNK_LEN].iat[0]:
                     done.append(emit_complete(c, buf))
                     del open_chunks[c], counts[c]
             if done:
@@ -266,12 +236,29 @@ def _chunk_payloads_fused(
     # payloads never re-enter Python after serialization. (An
     # executor-side merge stage was measured ~10% slower end-to-end —
     # it Arrow-round-trips every payload byte once more; a where/union
-    # split would recompute the serialize pass per branch.) The layout
-    # is the closed-formula sentinel exchange, NOT repartitionByRange:
-    # RangePartitioner's sampling pass re-executed this entire fused
-    # stage once per ingest just to read chunk numbers (round-8 stage
+    # split would recompute the serialize pass per branch.)
+    #
+    # toLocalIterator schedules ONE job per partition — smaller
+    # partitions mean each drain job computes LESS before the
+    # sequential emit can start, pipelining compute under the emit, but
+    # each job pays scheduling overhead. ~16 chunks/partition is the
+    # measured optimum (quiet-machine interleaved A/B at sf0.1, medians:
+    # 64/part 161k, 16/part 178k, 8/part 176k, 4/part 164k rec/s — the
+    # original ~64 sizing dated from when every drain job re-evaluated a
+    # Python-RDD offsets broadcast, since fixed). Ascending partitions
+    # keep global order for the sequential emit, bound driver memory per
+    # prefetched partition (16 × payload cap), and scale the job count
+    # with the data up to the 256 cap. The exchange is the
+    # closed-formula sentinel layout (chunker.ascending_chunk_layout),
+    # not repartitionByRange — RangePartitioner's sampling pass would
+    # re-execute the payload build once per ingest (round-8 stage
     # profile — the discarded pass cost more CPU than the kept one).
-    n_chunks = -(-n_rows // chunk_size)
+    # NOTE coalesce() would NOT preserve order here — under AQE it
+    # merges non-consecutive shuffle partitions. ``n_chunks`` falls out
+    # of the chunker's own counts pass (stats_out) — no extra count()
+    # job over the source, which for JSON/CSV/Excel ingests would be a
+    # second full parse pass.
+    n_parts = max(2, min(256, -(-n_chunks // CHUNKS_PER_DRAIN_PART)))
     return ascending_chunk_layout(
         local, n_chunks, n_parts, sort_cols=(CHUNK_COL, "first_rn")
     )
@@ -279,7 +266,7 @@ def _chunk_payloads_fused(
 
 def _merge_fragment_rows(rows):
     """Driver-side merge of consecutive fragment rows (complete=false)
-    emitted by _chunk_payloads_fused; complete rows pass through.
+    emitted by _chunk_payloads; complete rows pass through.
     O(straddling chunks) work — a few sha256 calls per ingestion."""
     frag_c = None
     frag_n = 0
@@ -448,15 +435,14 @@ def deliver_payloads(
     transport: Transport,
     total_records: int,
     mark_last: bool,
-    merge_fragments: bool = False,
 ) -> tuple[int, int]:
     """Ordered, ACK-gated emit of prepared chunk payloads (K1–K3).
 
     Sequential per contract (CV2); the expensive work already happened
     in executors. ``mark_last`` sets ``is_last=True`` on the final
     chunk (batch mode knows the end; streaming batches pass False and
-    rely on the completion event). ``merge_fragments`` enables the
-    driver-side fragment merge for the fused count-mode payload stream.
+    rely on the completion event). ``payloads`` is ``_chunk_payloads``
+    output; its fragment rows are merged on the way (_merge_fragment_rows).
     Returns (chunks_sent, total_records).
 
     One loop, one chunk in flight: each chunk goes through
@@ -488,9 +474,7 @@ def deliver_payloads(
         state.update_chunk(ingestion_id, row[CHUNK_COL], total_records)
         chunks_sent += 1
 
-    rows = payloads.toLocalIterator(prefetchPartitions=True)
-    if merge_fragments:
-        rows = _merge_fragment_rows(rows)
+    rows = _merge_fragment_rows(payloads.toLocalIterator(prefetchPartitions=True))
     prev = None
     for row in rows:
         if prev is not None:
@@ -510,23 +494,17 @@ class IngestSummary:
     status: str
 
 
-_RESUME_RN = "__resume_rn"
-
-# Drain-layout granularity: chunks per toLocalIterator partition (one
-# drain job each). See the sizing comment at the layout site in ingest().
-CHUNKS_PER_DRAIN_PART = 16
-
-
 def _chunked(
     df: DataFrame,
     request: IngestRequest,
     order_cols: list[str],
     stats_out: dict | None = None,
 ) -> DataFrame:
-    # Count mode always keeps the row number: the fused payload builder
-    # and record-level resume both key off it. Byte mode needs it only
-    # for record-level resume.
-    rn_col = _RESUME_RN if request.record_resume else None
+    """``df`` plus its 0-based ``chunk_number``, its 1-based global row
+    number (``_RESUME_RN``: record-level resume filters on it, the
+    payload builder orders by it) and its chunk's length
+    (``_CHUNK_LEN``: the builder's completeness test), in either
+    chunking mode. ``stats_out`` receives ``n_rows`` and ``n_chunks``."""
     if request.chunk_size_by_records is not None:
         return assign_chunks_by_count(
             df,
@@ -534,13 +512,15 @@ def _chunked(
             request.chunk_size_by_records,
             stats_out=stats_out,
             rn_col=_RESUME_RN,
+            len_col=_CHUNK_LEN,
         )
     return assign_chunks_by_bytes(
         df,
         order_cols,
         request.chunk_size_by_memory,
         stats_out=stats_out,
-        rn_col=rn_col,
+        rn_col=_RESUME_RN,
+        len_col=_CHUNK_LEN,
     )
 
 
@@ -583,62 +563,12 @@ def ingest(
         pending = chunked.where(F.col(CHUNK_COL) > last_chunk)
     # Canonicalization + checksumming run IN EXECUTORS (each chunk
     # sealed in the task holding its rows), in parallel across all
-    # cores; the driver only streams
-    # the finished payloads in chunk order and performs the (contract-
-    # mandated sequential, CV2) network emit. Payload bytes are the
-    # canonical JSON the consumer re-hashes, so producer and consumer
-    # share one canonicalizer end to end.
-    if request.chunk_size_by_records is not None:
-        # Count mode: fused builder — complete chunks serialize in the
-        # task that already holds their rows; the only remaining
-        # exchange is the drain-layout one, which also merges
-        # partition-border fragments. Output is already range-
-        # partitioned and chunk-sorted for the sequential emit.
-        est_chunks = -(-chunk_stats["n_rows"] // request.chunk_size_by_records)
-        n_parts = max(2, min(256, -(-est_chunks // CHUNKS_PER_DRAIN_PART)))
-        payloads = _chunk_payloads_fused(
-            pending,
-            record_cols,
-            _RESUME_RN,
-            request.chunk_size_by_records,
-            chunk_stats["n_rows"],
-            n_parts,
-        )
-    else:
-        # Byte mode: one hash exchange on chunk_number co-locates each
-        # chunk's rows (the v2 byte chunker no longer shuffles by epoch
-        # itself — its assignment pass is a broadcast probe), then
-        # payloads build in place.
-        drop = [_RESUME_RN] if request.record_resume else []
-        payloads = _chunk_payloads_local(
-            pending.drop(*drop).repartition(F.col(CHUNK_COL)),
-            record_cols,
-            order_cols,
-        )
-    # Drain layout: toLocalIterator schedules ONE job per partition —
-    # smaller partitions mean each drain job computes LESS before the
-    # sequential emit can start, pipelining compute under the emit, but
-    # each job pays scheduling overhead. ~16 chunks/partition is the
-    # measured optimum (quiet-machine interleaved A/B at sf0.1, medians:
-    # 64/part 161k, 16/part 178k, 8/part 176k, 4/part 164k rec/s — the
-    # original ~64 sizing dated from when every drain job re-evaluated a
-    # Python-RDD offsets broadcast, since fixed). Ascending partitions
-    # keep global order for the sequential emit, bound driver memory per
-    # prefetched partition (16 × payload cap), and scale the job count
-    # with the data up to the 256 cap. The exchange is the
-    # closed-formula sentinel layout (chunker.ascending_chunk_layout),
-    # not repartitionByRange — RangePartitioner's sampling pass would
-    # re-execute the payload build once per ingest. NOTE coalesce()
-    # would NOT preserve order here — under AQE it merges
-    # non-consecutive shuffle partitions.
-    # Chunk-count estimates fall out of the chunker's own counts pass
-    # (stats_out) — no extra count() job over the source, which for
-    # JSON/CSV/Excel ingests would be a second full parse pass. The
-    # fused count-mode path already produced this layout.
-    if request.chunk_size_by_records is None:
-        est_chunks = chunk_stats["n_chunks"]
-        n_parts = max(2, min(256, -(-est_chunks // CHUNKS_PER_DRAIN_PART)))
-        payloads = ascending_chunk_layout(payloads, est_chunks, n_parts)
+    # cores; the driver only streams the finished payloads in chunk
+    # order and performs the (contract-mandated sequential, CV2)
+    # network emit. Payload bytes are the canonical JSON the consumer
+    # re-hashes, so producer and consumer share one canonicalizer end
+    # to end. One builder serves both chunking modes.
+    payloads = _chunk_payloads(pending, record_cols, chunk_stats["n_chunks"])
     # NOTE a background persist+count "warm" of the payload frame was
     # A/B'd here (round 7) and removed: the drain's FIRST job already
     # executes the full upstream (scan + ordering exchange + fused
@@ -653,7 +583,6 @@ def ingest(
         transport,
         total_records,
         mark_last=True,
-        merge_fragments=request.chunk_size_by_records is not None,
     )
 
     # K4: completion handshake; mark COMPLETED only after consumer ACK.

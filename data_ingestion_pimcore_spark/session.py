@@ -11,6 +11,8 @@ for a large multi-executor cluster reading ~100 TB:
   broadcast-joins instead of shuffling the fact table.
 * maxPartitionBytes 128 MB — scan-side split sizing that keeps task
   counts sane at 100 TB (~800k tasks) while saturating executors.
+* Driver heap from ``SPARK_GRAFT_DRIVER_MEM``, else half the host's
+  physical memory capped at 16g (``default_driver_memory``).
 * Python workers fork from ``worker_daemon``, which stops every task
   from re-reading pyspark.zip's directory (~0.14-0.26 core-s per task
   on CPython < 3.12). Executors already import this package to unpickle
@@ -24,6 +26,20 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    half the host's physical memory (``phys_bytes``, default from
+    ``os.sysconf``), capped at 16g. A heap allowed to outgrow the host
+    invites a machine-wide OOM kill once a second session (a bench
+    probe, a concurrent test run) shares the box."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_DRIVER_MEM_CAP_MB, phys_bytes // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -54,9 +70,13 @@ def get_spark(
         # events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as epoch-nanos long and convert in load().
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Single-JVM test box: keep the driver fat; on a real cluster these
-        # come from spark-submit and are ignored here if already set.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Single-JVM box: keep the driver fat, but sized to the host; on
+        # a real cluster these come from spark-submit and are ignored
+        # here if already set.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     # Streaming state at production size (stream-stream joins, dedup

@@ -39,10 +39,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .chunker import CHUNK_COL, assign_chunks_by_count
+from .chunker import CHUNK_COL
 from .config import IngestRequest
 from .integrity import build_file_id, build_ingestion_id
-from .pipeline import IngestSummary, _chunk_payloads_local, deliver_payloads
+from .pipeline import (
+    IngestSummary,
+    _chunk_payloads,
+    _chunked,
+    deliver_payloads,
+)
 from .sink import Transport
 from .state import IngestionStateStore, version_for
 
@@ -89,7 +94,6 @@ def stream_ingest(
     checkpoint = f"{checkpoint_root.rstrip('/')}/{ingestion_id}"
 
     record_cols = stream_df.columns
-    size = request.chunk_size_by_records
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Chunk numbering continues from the ACKed high-water mark. On
@@ -101,16 +105,14 @@ def stream_ingest(
         # read is the serialization point; micro-batches are sequential.
         base = state.get_last_chunk(ingestion_id) + 1
         totals = state.get_total_records(ingestion_id)
-        chunked = assign_chunks_by_count(batch_df, order_cols, size).withColumn(
-            CHUNK_COL, F.col(CHUNK_COL) + F.lit(base).cast("long")
-        )
-        # The batch byte-mode shape: a hash exchange on chunk_number
-        # co-locates each chunk's rows, payloads build in place, and the
-        # sort restores chunk order (numbers start at ``base``, so the
-        # batch path's dense drain layout does not apply).
-        payloads = _chunk_payloads_local(
-            chunked.repartition(F.col(CHUNK_COL)), record_cols, order_cols
-        ).orderBy(CHUNK_COL)
+        # The batch builder over 0-based chunks, then shifted by
+        # ``base``: the shift keeps the ascending drain layout, so the
+        # payloads need no re-sort.
+        stats: dict = {}
+        chunked = _chunked(batch_df, request, order_cols, stats_out=stats)
+        payloads = _chunk_payloads(
+            chunked, record_cols, stats["n_chunks"]
+        ).withColumn(CHUNK_COL, F.col(CHUNK_COL) + F.lit(base).cast("long"))
         deliver_payloads(
             payloads, ingestion_id, state, transport, totals, mark_last=False
         )

@@ -132,6 +132,36 @@ def test_record_level_resume_mid_chunk(spark, tmp_path, products):
     assert s.status == "COMPLETED"
 
 
+def test_record_level_resume_mid_chunk_byte_mode(spark, tmp_path, products):
+    """record_resume=True in byte mode: with chunk 0 acked and 3
+    records of chunk 1 counted, the resume re-sends chunk 1 with ONLY
+    its unacked remainder, in order, then the following chunks whole."""
+    req = _request(
+        chunk_size_by_records=None, chunk_size_by_memory=2048, record_resume=True
+    )
+    fresh = ChunkValidator()
+    ingest(spark, req, products, IngestionStateStore(str(tmp_path / "f.parquet")), fresh)
+    sizes = [len(r) for r in fresh.received_records]
+    assert len(sizes) > 3 and sizes[1] > 3
+    acked = sizes[0] + 3
+
+    state = _store(tmp_path)
+    iid = build_ingestion_id(
+        build_file_id(req.file_path, req.file_type), version_for(False)
+    )
+    state.update_chunk(iid, 0, acked)  # chunk 0 + 3 records of chunk 1
+    validator = ChunkValidator()
+    validator.last_chunk[iid] = 0
+    s = ingest(spark, req, products, state, validator)
+    assert validator.received_chunks == list(range(1, len(sizes)))
+    assert [r["product_id"] for r in validator.received_records[0]] == list(
+        range(acked + 1, sizes[0] + sizes[1] + 1)
+    )
+    assert validator.received_records[1:] == fresh.received_records[2:]
+    assert s.total_records == 100
+    assert s.status == "COMPLETED"
+
+
 def test_transient_nack_retried(spark, tmp_path, products):
     validator = ChunkValidator(reject_once={4})
     state = _store(tmp_path)
@@ -452,27 +482,28 @@ def test_warm_ingest_runs(spark):
 
 
 def test_fused_payloads_equal_groupby_payloads(spark):
-    """The fused builder (complete-in-task + fragment merge) must
-    produce byte-identical payloads and checksums to the co-located
-    builder on the same chunked frame hash-partitioned by chunk_number
-    (the byte-mode and streaming shape) for every chunk, across chunk
-    sizes that do and don't divide the row count (fragment-heavy cases
-    included)."""
-    from pyspark.sql import functions as F
-
+    """The payload builder (complete-in-task + fragment merge) must
+    produce byte-identical (n_records, checksum, payload) to a driver-
+    side reference — the chunked rows grouped by chunk_number, ordered
+    by global row number and sealed whole — for every chunk, in count
+    mode (chunk sizes that do and don't divide the row count), in byte
+    mode, and under a record-resume filter that leaves a partial first
+    chunk. The 8-range ordering exchange holds more ranges than chunks
+    at sizes 2500 and 4000, which forces the fragment path."""
     from data_ingestion_pimcore_spark.pipeline import (
         CHUNK_COL,
         _RESUME_RN,
-        _chunk_payloads_fused,
-        _chunk_payloads_local,
+        _chunk_payloads,
         _chunked,
         _merge_fragment_rows,
+        _records,
+        _seal,
     )
 
     # deterministic synthetic source with a unique key: order_cols must
-    # be a TOTAL order (pipeline contract), and the two builders
-    # evaluate the lineage independently, so the source must produce
-    # identical rows on every evaluation (no limit/dropDuplicates).
+    # be a TOTAL order (pipeline contract), and the builder and the
+    # reference evaluate the lineage independently, so the source must
+    # produce identical rows on every evaluation (no limit/dropDuplicates).
     order = ["k"]
     li = spark.range(2500).select(
         F.col("id").alias("k"),
@@ -481,36 +512,37 @@ def test_fused_payloads_equal_groupby_payloads(spark):
         (F.col("id") * 1.5).alias("x"),
         F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") % 7).alias("n"),
     )
-    for chunk_size in (100, 999, 2500, 4000):
+    # (case, request sizing, records already counted by a resume)
+    cases = [
+        *((f"count-{n}", dict(chunk_size_by_records=n), None)
+          for n in (100, 999, 2500, 4000)),
+        *((f"bytes-{b}", dict(chunk_size_by_records=None, chunk_size_by_memory=b), None)
+          for b in (4096, 65536)),
+        ("count-1000-resume-1234", dict(chunk_size_by_records=1000), 1234),
+    ]
+    for case, sizing, resume_after in cases:
         req = _request(
-            file_path="mem://fused-eq",
-            file_type="parquet",
-            chunk_size_by_records=chunk_size,
-            order_cols=tuple(order),
+            file_path="mem://fused-eq", file_type="parquet",
+            order_cols=tuple(order), **sizing,
         )
         stats: dict = {}
         chunked = _chunked(li, req, order, stats_out=stats)
-        fused = _chunk_payloads_fused(
-            chunked, li.columns, _RESUME_RN, chunk_size, stats["n_rows"], 2
-        )
+        if resume_after is not None:
+            chunked = chunked.where(F.col(_RESUME_RN) > resume_after)
+        raw = _chunk_payloads(chunked, li.columns, stats["n_chunks"]).collect()
         got = {
-            r["chunk_number"]: (
-                r["n_records"], r["checksum"], bytes(r["payload"])
-            )
-            for r in _merge_fragment_rows(
-                fused.orderBy("chunk_number", "first_rn").collect()
-            )
+            r[CHUNK_COL]: (r["n_records"], r["checksum"], bytes(r["payload"]))
+            for r in _merge_fragment_rows(raw)
         }
-        grp = _chunk_payloads_local(
-            chunked.drop(_RESUME_RN).repartition(F.col(CHUNK_COL)),
-            li.columns,
-            order,
-        ).collect()
         want = {
-            r["chunk_number"]: (r["n_records"], r["checksum"], bytes(r["payload"]))
-            for r in grp
+            int(c): _seal(int(c), _records(g.sort_values(_RESUME_RN), li.columns))[1:]
+            for c, g in chunked.toPandas().groupby(CHUNK_COL)
         }
-        assert got == want, f"chunk_size={chunk_size}"
+        assert got == want, case
+        if case in ("count-2500", "count-4000", "count-1000-resume-1234"):
+            assert not all(r["complete"] for r in raw), case
+        if case in ("count-100", "bytes-4096"):
+            assert any(r["complete"] for r in raw), case
 
 
 def test_interleaved_concurrent_ingestions_resume(spark, tmp_path, products):

@@ -445,11 +445,7 @@ def test_fused_payload_plan_has_two_exchanges(spark):
     once (the drain-layout range exchange) — the groupBy builder's
     third, full-record exchange must NOT reappear."""
     from data_ingestion_pimcore_spark.config import IngestRequest
-    from data_ingestion_pimcore_spark.pipeline import (
-        _RESUME_RN,
-        _chunk_payloads_fused,
-        _chunked,
-    )
+    from data_ingestion_pimcore_spark.pipeline import _chunk_payloads, _chunked
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     req = IngestRequest(
@@ -461,9 +457,7 @@ def test_fused_payload_plan_has_two_exchanges(spark):
     )
     stats: dict = {}
     chunked = _chunked(li, req, list(req.order_cols), stats_out=stats)
-    payloads = _chunk_payloads_fused(
-        chunked, li.columns, _RESUME_RN, 1000, stats["n_rows"], 2
-    )
+    payloads = _chunk_payloads(chunked, li.columns, stats["n_chunks"])
     plan = payloads._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -478,6 +472,48 @@ def test_fused_payload_plan_has_two_exchanges(spark):
         if "Exchange" in ln and "BroadcastExchange" not in ln
     ]
     assert len(shuffles) == 2, tree
+
+
+def test_byte_mode_payload_plan_has_no_chunk_exchange(spark, tmp_path, monkeypatch):
+    """Byte mode builds payloads in the ordering stage, as count mode
+    does: between the row-number Window and MapInPandas there is no
+    hash Exchange on chunk_number (full records would cross the network
+    twice). The plan is the one ingest() hands to deliver_payloads."""
+    from data_ingestion_pimcore_spark import pipeline
+    from data_ingestion_pimcore_spark.config import IngestRequest
+    from data_ingestion_pimcore_spark.sink import ChunkValidator
+    from data_ingestion_pimcore_spark.state import IngestionStateStore
+
+    seen = []
+
+    def capture(payloads, ingestion_id, state, transport, total, **kw):
+        seen.append(payloads)
+        return 0, total
+
+    monkeypatch.setattr(pipeline, "deliver_payloads", capture)
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    req = IngestRequest(
+        file_path=f"{SF}/lineitem.parquet",
+        file_type="parquet",
+        chunk_size_by_memory=64 * 1024,
+        re_ingestion=True,
+        order_cols=("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
+    )
+    state = IngestionStateStore(str(tmp_path / "state.parquet"))
+    pipeline.ingest(spark, req, li, state, ChunkValidator())
+    plan = seen[0]._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    lines = plan.split("\n\n(1)")[0].splitlines()
+    top = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    window = next(i for i, ln in enumerate(lines) if i > top and "Window" in ln)
+    between = [
+        ln for ln in lines[top:window]
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ]
+    assert between == [], "\n".join(lines)
 
 
 def test_split_train_val_is_map_side_only(spark):

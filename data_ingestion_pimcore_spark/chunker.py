@@ -22,7 +22,10 @@ cross-job shuffle determinism:
 * Rows hash-partition by ``__pid`` (all rows of a range land in one
   task) and sort locally; per-range counts become global offsets via a
   tiny broadcast join — the classic zipWithIndex pattern, two passes
-  over the data, driver state O(#ranges).
+  over the data, driver state O(#ranges). The range count is
+  ``num_partitions`` or ``spark.sql.shuffle.partitions``; it sets how
+  finely the order is cut, not the task count. AQE sizes the ordering
+  stage, merging adjacent ranges into one task by shuffle bytes.
 * Count-based chunking is then a pure projection ``floor((rn-1)/N)``.
 * Byte-budget chunking is EPOCH'd greedy: the exact global row number
   defines fixed epochs of ``epoch_rows`` records, and the (inherently
@@ -70,76 +73,6 @@ _SEED = 42
 # test asserts "sql" so a silently-swallowed fast-path failure can't
 # make it compare the fallback against itself.
 _LAST_PID_PATH: str | None = None
-
-
-# Rows per range for the data-scaled task width (_auto_ranges). 50k was
-# the CPU-parity point of the per-task-overhead table in _auto_ranges;
-# a round-10 interleaved A/B (sf0.1, 600k rows) measured the WALL
-# optimum at 20k: 30-wide canonicalize read a median 234k rec/s vs 166k
-# at 12-wide — the ~5 extra core-s of per-task setup bought 2.6x more
-# parallel width on the dominant map stage. That setup was the Python
-# worker re-reading pyspark.zip on every task (see worker_daemon), not
-# the JVM, and is gone; the value was tuned around it and has not been
-# re-measured since. Inputs >= 1.6M rows hit the shuffle-partition cap
-# either way, so the 10x/100x probes are unaffected. To try another
-# value, change this constant and A/B the two git revisions.
-_ROWS_PER_RANGE = 20000
-
-
-def _rows_estimate(df: DataFrame) -> int | None:
-    """Driver-side row estimate from local parquet footers, or None.
-
-    Reads ≤8 footers (evenly strided over the sorted file list) and
-    extrapolates — O(ms), no Spark job. None for non-file sources,
-    remote URIs, unreadable footers, or absurd file counts; callers
-    fall back to configuration. Estimate quality is balance/overhead-
-    relevant only: range counts never affect row numbering."""
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        return None
-    if not files or len(files) > 10_000:
-        return None
-    paths = []
-    for u in files:
-        if not u.startswith("file:"):
-            return None
-        from urllib.parse import unquote, urlparse
-
-        paths.append(unquote(urlparse(u).path))
-    sample = paths if len(paths) <= 8 else paths[:: max(1, len(paths) // 8)][:8]
-    try:
-        import pyarrow.parquet as _pq
-
-        rows = [_pq.ParquetFile(p).metadata.num_rows for p in sample]
-    except Exception:
-        return None
-    if not rows:
-        return None
-    return int(sum(rows) / len(sample) * len(paths))
-
-
-def _auto_ranges(df: DataFrame) -> int | None:
-    """Range count scaled to the data: ~_ROWS_PER_RANGE rows per range,
-    capped at spark.sql.shuffle.partitions.
-
-    Each Arrow Python task has a fixed, data-independent cost, so
-    running a small ingest at the full configured width spends its CPU
-    on task setup: wasted heat for one ingestion, stolen throughput when
-    four run concurrently. The width was tuned when that cost was
-    ~0.25 core-s per task (4/8/16/32/64 tasks over the same 600k rows →
-    4.5/5.2/9.0/11.8/19.2 core-s), almost all of it the Python worker
-    re-reading pyspark.zip's directory in ``importlib.invalidate_caches``
-    on CPython < 3.12, not the JVM. Under ``worker_daemon`` a task costs
-    ~0.06-0.07 core-s (~25 ms JVM + ~40 ms Python, mapInPandas over
-    600k rows at 4/16/64 tasks, 4 vCPUs). ~50k rows/range put per-task
-    real work at parity with the old cost; big inputs still hit the
-    configured cap."""
-    est = _rows_estimate(df)
-    if est is None:
-        return None
-    cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cap, -(-est // _ROWS_PER_RANGE)))
 
 
 def _key_struct(df: DataFrame, order_cols: list[str]) -> Column:
@@ -282,8 +215,9 @@ def _pid_sql(df: DataFrame, order_cols: list[str], uniq: list[tuple]) -> str:
     return rec(0, len(uniq))
 
 
-# Boundary cache, keyed by (scan files, analyzed-plan semantic hash,
-# key cols, range count). Range boundaries are correctness-NEUTRAL for
+# Boundary cache, keyed by (source key, key cols, range count); the
+# source key (_source_key) is the scan files plus the analyzed-plan
+# semantic hash. Range boundaries are correctness-NEUTRAL for
 # everything built here: the global row number is boundary-independent
 # (per-range counts become offsets whatever the ranges are), count-mode
 # chunks are a pure function of rn, and byte-mode chunks restart at
@@ -324,16 +258,21 @@ def _file_signature(path: str):
     return (path,)
 
 
-def _sampled_boundaries(
-    df: DataFrame, order_cols: list[str], num_ranges: int
-) -> list[tuple]:
-    """Deduped range-boundary tuples for ``order_cols`` (len ≤ ranges-1)."""
+def _source_key(df: DataFrame) -> tuple | None:
+    """Cache key of ``df``'s row set — its input files' signatures plus
+    the analyzed plan's semantic hash — or None for a relation with no
+    input files. One file listing, one stat per local file and one
+    py4j call, so global_row_number computes it once for both caches."""
     files = tuple(_file_signature(p) for p in sorted(df.inputFiles()))
-    ck = (
-        (files, _plan_discriminator(df), tuple(order_cols), num_ranges)
-        if files
-        else None
-    )
+    return (files, _plan_discriminator(df)) if files else None
+
+
+def _sampled_boundaries(
+    df: DataFrame, order_cols: list[str], num_ranges: int, source: tuple | None
+) -> list[tuple]:
+    """Deduped range-boundary tuples for ``order_cols`` (len ≤ ranges-1),
+    cached under ``source`` (``_source_key``) unless it is None."""
+    ck = (source, tuple(order_cols), num_ranges) if source is not None else None
     if ck is not None and ck in _BOUNDARY_CACHE:
         return _BOUNDARY_CACHE[ck]
     k = _SAMPLE_PER_RANGE * num_ranges
@@ -386,23 +325,15 @@ def _sampled_boundaries(
 
 
 # Per-range counts are a pure function of (row set, pid boundaries) —
-# exactly the boundary cache's key discipline (file (size, mtime)
-# signatures + analyzed-plan semantic hash + pid cols + range count),
-# so repeated ingests / queries over the same immutable files skip one
-# full counts pass. In-place local overwrites invalidate via the file
-# signature; in-memory relations (no input files) are never cached.
+# the boundary cache's key — so repeated ingests / queries over the
+# same immutable files skip one full counts pass.
 _COUNTS_CACHE: dict[tuple, list] = {}
 
 
 def _range_counts(
-    df: DataFrame, withpid: DataFrame, pid_cols: list[str], n_ranges: int
+    withpid: DataFrame, pid_cols: list[str], n_ranges: int, source: tuple | None
 ) -> list[tuple[int, int]]:
-    files = tuple(_file_signature(p) for p in sorted(df.inputFiles()))
-    ck = (
-        (files, _plan_discriminator(df), tuple(pid_cols), n_ranges)
-        if files
-        else None
-    )
+    ck = (source, tuple(pid_cols), n_ranges) if source is not None else None
     if ck is not None and ck in _COUNTS_CACHE:
         return _COUNTS_CACHE[ck]
     counts = [
@@ -416,7 +347,7 @@ def _range_counts(
 
 
 def _deterministic_pid(
-    df: DataFrame, order_cols: list[str], num_ranges: int
+    df: DataFrame, order_cols: list[str], num_ranges: int, source: tuple | None
 ) -> tuple[DataFrame, int]:
     """Attach ``__pid``: the row's range index under boundaries sampled
     once on the driver. Pure function of the key → stable across jobs.
@@ -430,7 +361,7 @@ def _deterministic_pid(
     """
     if num_ranges <= 1:
         return df.withColumn(_PID, F.lit(0).cast("long")), 1
-    uniq = _sampled_boundaries(df, order_cols, num_ranges)
+    uniq = _sampled_boundaries(df, order_cols, num_ranges, source)
     if not uniq:
         return df.withColumn(_PID, F.lit(0).cast("long")), 1
 
@@ -618,14 +549,19 @@ def global_row_number(
     excluded from boundary sampling and from the counts pass, which
     column-pruning then reduces to a cheap scan.
 
+    ``num_partitions`` (default ``spark.sql.shuffle.partitions``) is the
+    number of sampled ranges only. The task count of the ordering stage
+    is AQE's: it coalesces the ``__pid`` exchange by shuffle bytes, so a
+    small input runs in a few tasks and a large one at full width.
+
     ``late_project`` (DataFrame → DataFrame) is applied AFTER the
     explicit hash-exchange on ``__pid`` and may add columns referenced
     by ``order_cols``. Expensive per-row derivations (e.g. the
     canonical record string) belong here: placed before the exchange
     they execute in the scan stage, whose task count is the file-split
     count — one task for a small single-row-group file, idling every
-    other core; placed after, they run at the exchange's parallelism
-    regardless of the input layout.
+    other core; placed after, they run at the exchange's (AQE-sized)
+    parallelism regardless of the input layout.
 
     Everything stays JVM-side (no Python round-trip): the hash-exchange
     on ``__pid`` (which the window requires anyway) is the only shuffle.
@@ -633,22 +569,25 @@ def global_row_number(
     from pyspark.sql.window import Window
 
     pid_cols = pid_cols or order_cols
+    source = _source_key(df)
     withpid, n_ranges = _deterministic_pid(
         df,
         pid_cols,
         num_partitions
-        or _auto_ranges(df)
         or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        source,
     )
-    counts = _range_counts(df, withpid, pid_cols, n_ranges)
+    counts = _range_counts(withpid, pid_cols, n_ranges, source)
     if stats_out is not None:
         # Free byproduct of the counts pass — callers sizing downstream
         # stages use this instead of a second count() over the source.
         stats_out["n_rows"] = sum(c for _, c in counts)
     offsets = F.broadcast(_offsets_df(counts, df.sparkSession, "__offset"))
     # Explicit exchange: HashPartitioning(__pid) satisfies the window's
-    # clustering requirement, so no second shuffle is added.
-    clustered = withpid.repartition(n_ranges, F.col(_PID))
+    # clustering requirement, so no second shuffle is added. Given no
+    # partition count, it is one AQE may coalesce (several ranges per
+    # task are safe: order comes from the offsets, not the placement).
+    clustered = withpid.repartition(F.col(_PID))
     if late_project is not None:
         clustered = late_project(clustered)
     w = Window.partitionBy(_PID).orderBy(*order_cols)

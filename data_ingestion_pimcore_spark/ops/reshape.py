@@ -259,9 +259,9 @@ def reshape_shuffle_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.md5(F.col("doc_id").cast("string")).alias("__h")
     )
-    return global_row_number(
-        d, ["__h", "doc_id"], "shuffle_pos", num_partitions=8
-    ).select("doc_id", "shuffle_pos")
+    return global_row_number(d, ["__h", "doc_id"], "shuffle_pos").select(
+        "doc_id", "shuffle_pos"
+    )
 
 
 # Per-source mixing rates: heavier sources are down-sampled harder.

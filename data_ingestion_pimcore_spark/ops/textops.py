@@ -505,11 +505,8 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load(spark, sf_dir, "documents")).select(
         "doc_id", F.size(_words(F.col("text"))).alias("n_tokens")
     )
-    # 8 ranges: documents is ~5k rows/SF-unit — 32 range tasks would be
-    # pure scheduling overhead (the chunker scales ranges with
-    # num_partitions for genuinely large inputs).
     packed = assign_chunks_by_bytes(
-        d, ["doc_id"], PACK_BUDGET_TOKENS, size_col="n_tokens", num_partitions=8
+        d, ["doc_id"], PACK_BUDGET_TOKENS, size_col="n_tokens"
     )
     return packed.select(
         "doc_id", "n_tokens", F.col(CHUNK_COL).alias("pack_id")

@@ -7,8 +7,9 @@ Batch-mode equivalent of the reference's ``stream_and_push``
 * All compute (scan, canonicalization, chunk assignment, sizes) is a
   distributed declarative plan.
 * The resume filter (``chunk_number > last_chunk``, reference K3) is a
-  DataFrame predicate, so Catalyst prunes already-ACKed chunks *before*
-  the expensive work on re-runs.
+  DataFrame predicate above the ordering exchange: a re-run skips the
+  already-ACKed chunks' Python serialize, but still scans and shuffles
+  every record (pruning below the exchange: ROADMAP Direction 2).
 * Chunks serialize in executors through one serializer (``_records``
   → ``_seal``: canonical JSON + SHA-256) and one builder,
   ``_chunk_payloads``, for count mode, byte mode and streaming
@@ -558,8 +559,9 @@ def ingest(
         # consumer's running count continues exactly where it stopped.
         pending = chunked.where(F.col(_RESUME_RN) > total_records)
     else:
-        # K3: skip already-ACKed chunks — a pushed-down predicate, so
-        # re-runs never recompute completed work.
+        # K3: skip already-ACKed chunks. The predicate sits above the
+        # ordering exchange, so it saves their Python serialize only;
+        # the scan and shuffle still cover every record (ROADMAP D2).
         pending = chunked.where(F.col(CHUNK_COL) > last_chunk)
     # Canonicalization + checksumming run IN EXECUTORS (each chunk
     # sealed in the task holding its rows), in parallel across all

@@ -308,11 +308,11 @@ def test_pid_sql_matches_column_tree_on_hostile_keys(spark):
     # The SQL fast path must actually be in play for these types — a
     # silent fallback would make the parity check compare the Column
     # tree against itself (vacuous).
-    boundaries = chunker._sampled_boundaries(df, order_cols, 8)
+    boundaries = chunker._sampled_boundaries(df, order_cols, 8, None)
     sql = chunker._pid_sql(df, order_cols, boundaries)
     assert "CASE WHEN" in sql and "named_struct" in sql
 
-    with_sql, n1 = chunker._deterministic_pid(df, order_cols, 8)
+    with_sql, n1 = chunker._deterministic_pid(df, order_cols, 8, None)
     # ...and _deterministic_pid itself must have TAKEN the fast path —
     # if F.expr/withColumn threw and it silently fell back, the parity
     # check below would compare the Column tree against itself.
@@ -323,7 +323,7 @@ def test_pid_sql_matches_column_tree_on_hostile_keys(spark):
         chunker._pid_sql = lambda *a, **k: (_ for _ in ()).throw(
             chunker._Unrenderable("forced")
         )
-        with_tree, n2 = chunker._deterministic_pid(df, order_cols, 8)
+        with_tree, n2 = chunker._deterministic_pid(df, order_cols, 8, None)
         assert chunker._LAST_PID_PATH == "tree"
     finally:
         chunker._pid_sql = real
@@ -490,28 +490,6 @@ def test_offsets_df_is_jvm_local_relation(spark):
     plan = off._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan, plan
     assert "ExistingRDD" not in plan, plan
-
-
-def test_auto_ranges_scales_with_parquet_footers(spark, tmp_path):
-    """_auto_ranges: footer-estimated rows / _ROWS_PER_RANGE, capped at
-    the shuffle-partition conf, None for non-file sources."""
-    from data_ingestion_pimcore_spark import chunker as ck
-
-    p = str(tmp_path / "t.parquet")
-    spark.range(1000).repartition(1).write.parquet(p)
-    df = spark.read.parquet(p)
-    assert ck._rows_estimate(df) == 1000  # single footer: exact
-    assert ck._auto_ranges(df) == 1  # 1000 rows -> one range
-
-    p2 = str(tmp_path / "many.parquet")
-    spark.range(1000).repartition(16).write.parquet(p2)
-    df2 = spark.read.parquet(p2)
-    est = ck._rows_estimate(df2)  # strided 8-footer extrapolation
-    assert est is not None and abs(est - 1000) <= 200
-
-    mem = spark.createDataFrame([(1,)], "x long")
-    assert ck._rows_estimate(mem) is None
-    assert ck._auto_ranges(mem) is None
 
 
 def test_integrity_chain_streamed_fold_and_spill_path(spark, monkeypatch):

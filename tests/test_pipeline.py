@@ -488,8 +488,10 @@ def test_fused_payloads_equal_groupby_payloads(spark):
     by global row number and sealed whole — for every chunk, in count
     mode (chunk sizes that do and don't divide the row count), in byte
     mode, and under a record-resume filter that leaves a partial first
-    chunk. The 8-range ordering exchange holds more ranges than chunks
-    at sizes 2500 and 4000, which forces the fragment path."""
+    chunk. AQE merges this small input's 8 ranges into one task, so the
+    cases that need the fragment path (more ranges than chunks at sizes
+    2500 and 4000, and the partial resume chunk) run again with
+    coalescing off, where each range is its own task."""
     from data_ingestion_pimcore_spark.pipeline import (
         CHUNK_COL,
         _RESUME_RN,
@@ -520,7 +522,7 @@ def test_fused_payloads_equal_groupby_payloads(spark):
           for b in (4096, 65536)),
         ("count-1000-resume-1234", dict(chunk_size_by_records=1000), 1234),
     ]
-    for case, sizing, resume_after in cases:
+    def built_equals_reference(case, sizing, resume_after):
         req = _request(
             file_path="mem://fused-eq", file_type="parquet",
             order_cols=tuple(order), **sizing,
@@ -539,10 +541,22 @@ def test_fused_payloads_equal_groupby_payloads(spark):
             for c, g in chunked.toPandas().groupby(CHUNK_COL)
         }
         assert got == want, case
-        if case in ("count-2500", "count-4000", "count-1000-resume-1234"):
-            assert not all(r["complete"] for r in raw), case
+        return raw
+
+    for case, sizing, resume_after in cases:
+        raw = built_equals_reference(case, sizing, resume_after)
         if case in ("count-100", "bytes-4096"):
             assert any(r["complete"] for r in raw), case
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    keep = spark.conf.get(coalesce)
+    try:
+        spark.conf.set(coalesce, "false")
+        for case, sizing, resume_after in cases:
+            if case in ("count-2500", "count-4000", "count-1000-resume-1234"):
+                raw = built_equals_reference(case, sizing, resume_after)
+                assert not all(r["complete"] for r in raw), case
+    finally:
+        spark.conf.set(coalesce, keep)
 
 
 def test_interleaved_concurrent_ingestions_resume(spark, tmp_path, products):

@@ -516,6 +516,60 @@ def test_byte_mode_payload_plan_has_no_chunk_exchange(spark, tmp_path, monkeypat
     assert between == [], "\n".join(lines)
 
 
+def test_small_ingest_ordering_exchange_is_aqe_coalesced(spark, tmp_path, monkeypatch):
+    """A source with no parquet footers (an in-memory frame) gets its
+    ordering-stage width from AQE, not from the shuffle-partition conf:
+    in the executed payload plan, the __pid exchange is read through a
+    coalesced AQEShuffleRead under MapInPandas. The input is
+    warm_ingest's byte-mode shape: 24,576 rows, 256 KiB chunks."""
+    from data_ingestion_pimcore_spark import pipeline
+    from data_ingestion_pimcore_spark.config import IngestRequest
+    from data_ingestion_pimcore_spark.sink import ChunkValidator
+    from data_ingestion_pimcore_spark.state import IngestionStateStore
+
+    seen = []
+    deliver = pipeline.deliver_payloads
+
+    def capture(payloads, *args, **kw):
+        seen.append(payloads)
+        return deliver(payloads, *args, **kw)
+
+    monkeypatch.setattr(pipeline, "deliver_payloads", capture)
+    df = spark.range(24576).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("w"), F.col("id").cast("string")).alias("v"),
+        (F.col("id") * 1.5).alias("x"),
+    )
+    req = IngestRequest(
+        file_path="mem://aqe-width",
+        file_type="parquet",
+        chunk_size_by_memory=256 * 1024,
+        re_ingestion=True,
+        order_cols=("k", "v"),
+    )
+    state = IngestionStateStore(str(tmp_path / "state.parquet"))
+    out = pipeline.ingest(spark, req, df, state, ChunkValidator())
+    assert out.total_records == 24576
+    plan = seen[0]._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+    assert "isFinalPlan=true" in plan, plan
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    top = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    ordering = next(
+        i for i, ln in enumerate(lines)
+        if "Exchange hashpartitioning(__pid" in ln and "REPARTITION_BY" in ln
+    )
+    assert top < ordering, plan
+    read = next(
+        ln for ln in reversed(lines[top:ordering])
+        if "ShuffleQueryStage" not in ln
+    )
+    assert "AQEShuffleRead coalesced" in read, plan
+
+
 def test_split_train_val_is_map_side_only(spark):
     """The hash-gate split must add NO shuffle: a scan + project and
     nothing else, at any corpus size."""

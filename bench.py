@@ -936,9 +936,7 @@ def main() -> None:
         # (the probe set has grown to ~35 min of wall), the most recent
         # checkpoint still yields a parseable partial artifact instead
         # of nothing. The final line, printed last, supersedes these.
-        t = round(sum(v for k, v in timings.items() if k not in _NON_TIMING), 3)
-        c = round(sum(v for k, v in timings.items() if k in _CORE), 3)
-        print(_compact_line(timings, t, c, sf_val), flush=True)
+        print(_compact_line(timings, *_sums(timings), sf_val), flush=True)
 
     # Ingest e2e runs FIRST: it is the measurement most sensitive to
     # accumulated JVM state (broadcast blocks, shuffle files, GC debt
@@ -1222,20 +1220,19 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    total = round(
-        sum(v for k, v in timings.items() if k not in _NON_TIMING), 3
-    )
     # Round-over-round comparability: the headline set grows every
     # round, which inflates headline_total_sec. core_total_sec sums
     # the FIXED round-1 query set only (module-level _CORE), so it is
     # the number to compare across BENCH_r{N}.json files.
-    core = round(sum(v for k, v in timings.items() if k in _CORE), 3)
+    total, core = _sums(timings)
     full = {
         "metric": "headline_total_sec",
         "value": total,
         "unit": "sec",
         "core_total_sec": core,
         "queries": timings,
+        "units": {k: _METRICS.get(k, _QUERY_METRIC)[0] for k in timings},
+        "better": {k: _METRICS.get(k, _QUERY_METRIC)[1] for k in timings},
         "sf": sf_val,
     }
     if sf1 is not None:
@@ -1265,96 +1262,67 @@ def main() -> None:
     print(_compact_line(timings, total, core, sf_val))
 
 
-_COMPACT_EXTRAS = (
-    "ingest_records_per_sec",
-    "ingest_records_per_sec_min",
-    "ingest_records_per_sec_max",
-    "ingest_records_per_sec_sync",
-    "ingest_records_per_sec_10x",
-    "ingest_records_per_sec_10x_min",
-    "ingest_records_per_sec_10x_max",
-    "ingest_records_per_sec_100x",
-    "ingest_records_per_sec_100x_min",
-    "ingest_records_per_sec_sf1",
-    "core_total_sec_sf1",
-    "load_index_sf1",
-    "ingest_concurrent_4x",
-    "ingest_concurrent_scaling",
-    "ingest_concurrent_scaling_min",
-    "ingest_concurrent_scaling_max",
-    "ref_loop_rps",
-    "ref_loop_rps_10x",
-    "bar_ratio",
-    "bar_ratio_min",
-    "bar_ratio_max",
-    "bar_ratio_10x",
-    "bar_ratio_10x_min",
-    "bar_ratio_10x_max",
-    "bar_ratio_100x",
-    "load_index",
-    "load_index_10x",
-    "load_index_100x",
-    "excel_scan_32files_speedup",
-    # r13 (r12 verdict item 2): the speedup ratio alone hid the scan's
-    # absolute cost — ship the timed 1-file/32-file scan seconds in the
-    # compact line too (the untimed fixture build was never part of the
-    # metric; both _sec keys are already excluded from the headline sum).
-    "excel_scan_1file_sec",
-    "excel_scan_32files_sec",
-)
+# Every non-query key main() records: key -> (unit, which way is better,
+# shipped in the compact tail line?). The headline sum counts only
+# seconds of query time, so it skips exactly these keys; the compact
+# line carries _CORE plus the flagged keys, in this order.
+_METRICS = {
+    "ingest_records_per_sec": ("rec/s", "higher", True),
+    "ingest_records_per_sec_min": ("rec/s", "higher", True),
+    "ingest_records_per_sec_max": ("rec/s", "higher", True),
+    "ingest_records_per_sec_sync": ("rec/s", "higher", True),
+    "ingest_records_per_sec_10x": ("rec/s", "higher", True),
+    "ingest_records_per_sec_10x_min": ("rec/s", "higher", True),
+    "ingest_records_per_sec_10x_max": ("rec/s", "higher", True),
+    "ingest_records_per_sec_100x": ("rec/s", "higher", True),
+    "ingest_records_per_sec_100x_min": ("rec/s", "higher", True),
+    "ingest_records_per_sec_sf1": ("rec/s", "higher", True),
+    "core_total_sec_sf1": ("sec", "lower", True),
+    "load_index_sf1": ("ratio", "lower", True),
+    "ingest_e2e_cold": ("sec", "lower", False),
+    "ingest_concurrent_4x": ("rec/s", "higher", True),
+    "ingest_concurrent_4x_min": ("rec/s", "higher", False),
+    "ingest_concurrent_4x_max": ("rec/s", "higher", False),
+    "ingest_single_http": ("rec/s", "higher", False),
+    "ingest_concurrent_scaling": ("x", "higher", True),
+    "ingest_concurrent_scaling_min": ("x", "higher", True),
+    "ingest_concurrent_scaling_max": ("x", "higher", True),
+    "ref_loop_rps": ("rec/s", "higher", True),
+    "ref_loop_rps_min": ("rec/s", "higher", False),
+    "ref_loop_rps_max": ("rec/s", "higher", False),
+    "ref_loop_rps_10x": ("rec/s", "higher", True),
+    "bar_ratio": ("ratio", "lower", True),
+    "bar_ratio_min": ("ratio", "lower", True),
+    "bar_ratio_max": ("ratio", "lower", True),
+    "bar_ratio_10x": ("ratio", "lower", True),
+    "bar_ratio_10x_min": ("ratio", "lower", True),
+    "bar_ratio_10x_max": ("ratio", "lower", True),
+    "bar_ratio_100x": ("ratio", "lower", True),
+    "bar_ratio_100x_max": ("ratio", "lower", False),
+    "load_index": ("ratio", "lower", True),
+    "load_index_10x": ("ratio", "lower", True),
+    "load_index_100x": ("ratio", "lower", True),
+    "excel_scan_32files_speedup": ("x", "higher", True),
+    "excel_scan_1file_sec": ("sec", "lower", True),
+    "excel_scan_32files_sec": ("sec", "lower", True),
+}
+# Every other key is one query's (or ingest_e2e's) best time.
+_QUERY_METRIC = ("sec", "lower", False)
 
 
-# Metric keys excluded from the headline_total_sec wall-time sum
-# (throughputs, ratios, speedups — not seconds of query time).
-_NON_TIMING = (
-    "ingest_records_per_sec",
-    "ingest_records_per_sec_min",
-    "ingest_records_per_sec_max",
-    "ingest_records_per_sec_sync",
-    "ingest_records_per_sec_10x",
-    "ingest_records_per_sec_10x_min",
-    "ingest_records_per_sec_10x_max",
-    "ingest_records_per_sec_100x",
-    "ingest_records_per_sec_100x_min",
-    "ingest_records_per_sec_sf1",
-    "core_total_sec_sf1",
-    "load_index_sf1",
-    "ingest_e2e_cold",
-    "ingest_concurrent_4x",
-    "ingest_concurrent_4x_min",
-    "ingest_concurrent_4x_max",
-    "ingest_single_http",
-    "ingest_concurrent_scaling",
-    "ingest_concurrent_scaling_min",
-    "ingest_concurrent_scaling_max",
-    "ref_loop_rps",
-    "ref_loop_rps_min",
-    "ref_loop_rps_max",
-    "ref_loop_rps_10x",
-    "bar_ratio",
-    "bar_ratio_min",
-    "bar_ratio_max",
-    "bar_ratio_10x",
-    "bar_ratio_10x_min",
-    "bar_ratio_10x_max",
-    "bar_ratio_100x",
-    "bar_ratio_100x_max",
-    "load_index",
-    "load_index_10x",
-    "load_index_100x",
-    "excel_scan_32files_speedup",
-    "excel_scan_1file_sec",
-    "excel_scan_32files_sec",
-)
+def _sums(timings: dict) -> tuple[float, float]:
+    """(headline_total_sec, core_total_sec) of one timings dict."""
+    total = round(sum(v for k, v in timings.items() if k not in _METRICS), 3)
+    return total, round(sum(v for k, v in timings.items() if k in _CORE), 3)
 
 
 def _compact_line(timings: dict, total: float, core: float, sf_val) -> str:
     """The ~1.6 kB summary line the driver's tail capture parses: the
     fixed core-set per-query timings plus the headline scale metrics."""
     compact_q = {k: v for k, v in timings.items() if k in _CORE}
-    for extra in _COMPACT_EXTRAS:
-        if extra in timings:
-            compact_q[extra] = timings[extra]
+    for k, (_, _, compact) in _METRICS.items():
+        if compact and k in timings:
+            compact_q[k] = timings[k]
     return json.dumps(
         {
             "metric": "headline_total_sec",

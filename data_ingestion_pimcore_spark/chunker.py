@@ -48,17 +48,9 @@ from __future__ import annotations
 
 import pandas as pd
 
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-try:  # pyspark>=3.4 structured errors
-    from pyspark.errors import AnalysisException, ParseException
-
-    _SQL_RENDER_ERRORS: tuple = (ParseException, AnalysisException)
-except ImportError:  # pragma: no cover - older pyspark
-    from pyspark.sql.utils import AnalysisException, ParseException
-
-    _SQL_RENDER_ERRORS = (ParseException, AnalysisException)
 
 _PID = "__pid"
 _RN = "__rn"
@@ -397,7 +389,7 @@ def _deterministic_pid(
         out = df.withColumn(_PID, F.expr(_pid_sql(df, order_cols, uniq)))
         _LAST_PID_PATH = "sql"
         return out, len(uniq) + 1
-    except (_Unrenderable, *_SQL_RENDER_ERRORS):
+    except (_Unrenderable, ParseException, AnalysisException):
         _LAST_PID_PATH = "tree"
 
     key = _key_struct(df, order_cols)

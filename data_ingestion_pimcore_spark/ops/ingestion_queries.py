@@ -80,6 +80,9 @@ from ..integrity import (
     build_file_id,
     build_ingestion_id,
     canonical_string_col,
+    chunk_id_col,
+    file_id_col,
+    ingestion_id_col,
     sql_canonical_string,
 )
 from ..registry import register
@@ -296,16 +299,14 @@ FROM nation
 def ingest_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     file_path = F.concat(F.lit("/data/pim/"), F.lower("n_name"), F.lit(".json"))
-    file_id = F.sha2(F.concat_ws("|", file_path, F.lit("json")), 256)
-    ingestion_id = F.sha2(F.concat_ws("|", file_id, F.lit("resume")), 256)
+    file_id = file_id_col(file_path, F.lit("json"))
+    ingestion_id = ingestion_id_col(file_id, F.lit("resume"))
     return n.select(
         "n_nationkey",
         file_path.alias("file_path"),
         file_id.alias("file_id"),
         ingestion_id.alias("ingestion_id"),
-        F.concat_ws(":", ingestion_id, F.col("n_nationkey").cast("string")).alias(
-            "chunk_id"
-        ),
+        chunk_id_col(ingestion_id, F.col("n_nationkey")).alias("chunk_id"),
     )
 
 

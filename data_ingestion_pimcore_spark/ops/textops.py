@@ -189,21 +189,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (default 3), [text] when too short.
-
-    NOTE: evaluates ``split`` per array access inside the (interpreted,
-    non-CSE'd) lambda — fine for one-off use; hot paths must use
-    ``with_shingles`` which binds the words array to an attribute first.
-    """
-    w = F.split(text, " ")
-    idx = F.sequence(F.lit(0), F.size(w) - n)
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.get(w, i + k) for k in range(n)])
-    )
-    return F.when(F.size(w) >= n, F.array_distinct(grams)).otherwise(F.array(text))
-
-
 def with_shingles(
     df: DataFrame, text_col: str = "text", out: str = "shingles", n: int = 3
 ) -> DataFrame:

@@ -466,11 +466,6 @@ def open_object_binary(uri: str):
     )
 
 
-def open_s3_binary(uri: str):
-    """Back-compat name for the S3-only entry (now scheme-dispatched)."""
-    return open_object_binary(uri)
-
-
 def fetch_bytes(uri: str) -> bytes:
     """Whole object as bytes — for seekable consumers (zipfile/xlsx)."""
     with open_object_binary(uri) as f:

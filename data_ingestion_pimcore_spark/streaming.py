@@ -34,8 +34,6 @@ concurrent queries.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -150,12 +148,6 @@ def stream_ingest(
 
 
 # ------------------------------------------------------- event-time demo
-
-
-@dataclass
-class StreamWindowResult:
-    rows: list
-    query_name: str
 
 
 def streaming_tumbling_counts(

@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession
 from .config import IngestRequest, InvalidRequest
 from .pipeline import run_ingestion
 from .sink import HttpTransport, Transport
-from .state import IngestionStateStore
+from .state import DEFAULT_ROW, IngestionStateStore
 
 
 @dataclass
@@ -74,13 +74,7 @@ class IngestionService:
         except TypeError as exc:  # unknown/missing fields
             return {"status": "ERROR", "error": str(exc)}
 
-        from .integrity import build_file_id, build_ingestion_id
-        from .state import version_for
-
-        ingestion_id = build_ingestion_id(
-            build_file_id(request.file_path, request.file_type),
-            version_for(request.re_ingestion),
-        )
+        ingestion_id = request.ingestion_id
 
         def run() -> None:
             from .logging_util import get_logger
@@ -116,10 +110,11 @@ class IngestionService:
         if ex is None:
             return {"status": "UNKNOWN", "ingestion_id": ingestion_id}
         ex.thread.join(timeout)
+        row = self.state.row(ingestion_id) or DEFAULT_ROW
         return {
-            "status": self.state.get_status(ingestion_id) or "IN_PROGRESS",
+            "status": row["status"] or "IN_PROGRESS",
             "ingestion_id": ingestion_id,
-            "last_chunk": self.state.get_last_chunk(ingestion_id),
-            "total_records": self.state.get_total_records(ingestion_id),
+            "last_chunk": row["last_chunk"],
+            "total_records": row["total_records"],
             "error": str(ex.error) if ex.error else None,
         }

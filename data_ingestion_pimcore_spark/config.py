@@ -11,6 +11,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from .integrity import build_file_id, build_ingestion_id
+from .state import version_for
+
 VALID_FILE_TYPES = ("json", "excel", "parquet", "csv", "jsonl", "xml")
 
 MAX_CHUNK_RECORDS = 4000  # request_model.py:22 (ge=1, le=4000)
@@ -40,6 +43,10 @@ class IngestRequest:
     # reference relies on file order; at scale the order must be a
     # declared, reproducible sort key — SURVEY §7.4.3).
     order_cols: tuple[str, ...] = field(default_factory=tuple)
+    # Derived once, on validation (ingestion_controllers.py:31-41): a
+    # re-ingestion's version is the clock, so the service's reply and
+    # the pipeline's commits must read this one value.
+    ingestion_id: str = field(init=False)
 
     def __post_init__(self) -> None:
         if not self.file_path:
@@ -62,3 +69,6 @@ class IngestRequest:
             )
         if by_mem is not None and by_mem < 1:
             raise InvalidRequest("chunk_size_by_memory must be >= 1 byte")
+        self.ingestion_id = build_ingestion_id(
+            build_file_id(self.file_path, self.file_type), version_for(self.re_ingestion)
+        )

@@ -28,6 +28,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .app import IngestionService
 from .logging_util import get_logger
+from .state import DEFAULT_ROW
 
 
 def _make_handler(service: IngestionService):
@@ -50,14 +51,14 @@ def _make_handler(service: IngestionService):
                 return
             if self.path.startswith("/api/status/"):
                 iid = self.path.rsplit("/", 1)[1]
-                st = service.state
+                row = service.state.row(iid) or DEFAULT_ROW
                 self._reply(
                     200,
                     {
                         "ingestion_id": iid,
-                        "status": st.get_status(iid) or "UNKNOWN",
-                        "last_chunk": st.get_last_chunk(iid),
-                        "total_records": st.get_total_records(iid),
+                        "status": row["status"] or "UNKNOWN",
+                        "last_chunk": row["last_chunk"],
+                        "total_records": row["total_records"],
                     },
                 )
                 return

@@ -1280,8 +1280,7 @@ GROUP BY user_id
     "maxFilesPerTrigger=1 → 4 real micro-batches) MERGEs each batch's "
     "per-user delta (selector-aggregate latest + additive count) into "
     "a parquet-backed keyed table via a full-outer merge-and-publish "
-    "(write new version, then swap the pointer — the WAL/snapshot "
-    "discipline of state.IngestionStateStore), guarded by batchId so "
+    "(write new version, then swap the pointer), guarded by batchId so "
     "a replayed batch is a no-op — at-least-once delivery + "
     "idempotent merge = exactly-once state, the same contract as the "
     "reference's CV1 duplicate-chunk ACK (SURVEY §2.1). The replay is "

@@ -44,14 +44,9 @@ from .chunker import (
     assign_chunks_by_count,
 )
 from .config import IngestRequest
-from .integrity import (
-    build_chunk_id,
-    build_file_id,
-    build_ingestion_id,
-    canonical_dumps,
-)
+from .integrity import build_chunk_id, canonical_dumps
 from .sink import Transport, send_chunk_with_retry
-from .state import IngestionStateStore, version_for
+from .state import IngestionStateStore
 
 
 _PAYLOAD_COLS = [CHUNK_COL, "n_records", "checksum", "payload"]
@@ -542,9 +537,7 @@ def ingest(
     if not order_cols:
         raise ValueError("order_cols required for deterministic chunk numbering")
 
-    file_id = build_file_id(request.file_path, request.file_type)
-    ingestion_id = build_ingestion_id(file_id, version_for(request.re_ingestion))
-
+    ingestion_id = request.ingestion_id
     last_chunk = state.get_last_chunk(ingestion_id)
     total_records = state.get_total_records(ingestion_id)
 
@@ -578,7 +571,7 @@ def ingest(
     # every partition's expensive work is parallel and complete by the
     # first row — the background materialization only duplicated it
     # (interleaved A/B at sf0.1: statistically flat, 5.2-5.8 s both).
-    chunks_sent, total_records = deliver_payloads(
+    chunks_sent, _ = deliver_payloads(
         payloads,
         ingestion_id,
         state,
@@ -586,25 +579,39 @@ def ingest(
         total_records,
         mark_last=True,
     )
+    return complete_ingestion(ingestion_id, state, transport, chunks_sent)
 
-    # K4: completion handshake; mark COMPLETED only after consumer ACK.
+
+def complete_ingestion(
+    ingestion_id: str,
+    state: IngestionStateStore,
+    transport: Transport,
+    chunks_sent: int | None = None,
+    final: bool = True,
+) -> IngestSummary:
+    """K4 completion handshake, shared by batch and streaming: send the
+    COMPLETED event with the committed high-water mark and mark the
+    ingestion COMPLETED only on the consumer's ACK. A NACK leaves it
+    IN_PROGRESS without raising. ``final=False`` skips the handshake.
+    ``chunks_sent`` defaults to every committed chunk."""
     last = state.get_last_chunk(ingestion_id)
-    resp = transport(
-        {
-            "ingestion_id": ingestion_id,
-            "status": "COMPLETED",
-            "chunk_number": last,
-            "total_records": total_records,
-        }
-    )
-    if resp.ack:
-        state.mark_completed(ingestion_id)
-
+    total_records = state.get_total_records(ingestion_id)
+    if final:
+        resp = transport(
+            {
+                "ingestion_id": ingestion_id,
+                "status": "COMPLETED",
+                "chunk_number": last,
+                "total_records": total_records,
+            }
+        )
+        if resp.ack:
+            state.mark_completed(ingestion_id)
     return IngestSummary(
         ingestion_id=ingestion_id,
-        chunks_sent=chunks_sent,
+        chunks_sent=last + 1 if chunks_sent is None else chunks_sent,
         total_records=total_records,
-        last_chunk=state.get_last_chunk(ingestion_id),
+        last_chunk=last,
         status=state.get_status(ingestion_id) or "IN_PROGRESS",
     )
 
@@ -619,7 +626,7 @@ def warm_ingest(
     exact plan shapes of ``ingest()`` — deterministic-pid sampling,
     global-row-number window, Arrow ``mapInPandas`` serialization,
     broadcast offset join, ordered ``toLocalIterator`` drain, state
-    snapshot — so the FIRST real ingestion does not pay Python-worker
+    commits — so the FIRST real ingestion does not pay Python-worker
     pool spin-up, Arrow path initialization, and whole-stage-codegen
     JIT on top of its own work.
 

@@ -79,18 +79,6 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
     )
-    # Streaming state at production size (stream-stream joins, dedup
-    # over long horizons) belongs in RocksDB: state spills to local SSD
-    # instead of executor heap, with incremental checkpointing. At toy
-    # state sizes the per-instance overhead dominates (~1.7x slower on
-    # the local suite), so it is opt-in here and on by default in any
-    # real deployment.
-    if os.environ.get("SPARK_GRAFT_ROCKSDB_STATE"):
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
     if SparkSession.getActiveSession() is None:
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
     if extra_conf:

@@ -1,30 +1,21 @@
 """Persistent ingestion state store (reference ST1/ST2).
 
-Parity with the reference's SQLite table
+The reference's own SQLite table
 ``ingestion_state(ingestion_id TEXT PRIMARY KEY, last_chunk INTEGER,
 total_records INTEGER, status TEXT)``
-(`app/services/ingestion_state_store.py:26-33`) with its defaults:
-missing row → last_chunk = -1, total_records = 0 (`:36-50`).
+(`app/services/ingestion_state_store.py:26-68`), one upsert per write,
+with its defaults: missing row → last_chunk = -1, total_records = 0,
+status None (`:36-50`). The path names the database file whatever its
+suffix; a file there that is not a SQLite database raises
+``sqlite3.DatabaseError`` instead of starting empty.
 
-Storage is snapshot + write-ahead log — the same design as Structured
-Streaming's offset/commit logs on the driver:
-
-* Each ACK-gated commit APPENDS one JSON line to ``<path>.log`` and
-  flushes — O(1) per chunk, unlike rewriting the whole table (the
-  reference pays one SQLite transaction per chunk; a full-file rewrite
-  per commit turned the sequential delivery edge O(n²)-ish and showed
-  up as ~20% of end-to-end ingest wall time at sf0.1).
-* ``mark_completed`` / ``compact`` write the parquet snapshot
-  atomically (temp + rename) and truncate the log.
-* On open, the snapshot is loaded and the log replayed over it, so a
-  crash between appends loses at most commits the OS hadn't flushed —
-  and losing a commit is SAFE here: the chunk is re-sent on resume and
-  the consumer ACKs it idempotently via its ``chunk_id`` (CV1), which
-  is exactly the reference's at-least-once + idempotent-consumer
-  contract ("chunk-exactly-once", README:421).
-
-A ``as_dataframe`` view keeps state queryable from Spark (compacts
-first), mirroring how the reference exposes state to resume logic.
+Durability: in WAL mode with ``synchronous=NORMAL`` each ACK-gated
+commit survives a crash of the process; ``mark_completed`` checkpoints
+the WAL into the database file, fsync'd, before it returns. A commit
+lost to an OS crash is SAFE: the chunk is re-sent on resume and the
+consumer ACKs it idempotently via its ``chunk_id`` (CV1) — the
+reference's at-least-once + idempotent-consumer contract
+("chunk-exactly-once", README:421).
 
 Re-ingestion versioning (ST2, `app/controllers/ingestion_controllers.py:31-41`):
 ``version_for(re_ingestion)`` returns "resume" or an epoch-millis
@@ -34,117 +25,72 @@ re-ingestion is requested.
 
 from __future__ import annotations
 
-import json
 import os
+import sqlite3
 import threading
 import time
-
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-from pyspark.sql import DataFrame, SparkSession
 
 STATUS_IN_PROGRESS = "IN_PROGRESS"
 STATUS_COMPLETED = "COMPLETED"
 
-_SCHEMA = pa.schema(
-    [
-        ("ingestion_id", pa.string()),
-        ("last_chunk", pa.int64()),
-        ("total_records", pa.int64()),
-        ("status", pa.string()),
-    ]
-)
+DEFAULT_ROW = {"last_chunk": -1, "total_records": 0, "status": None}
 
 
 class IngestionStateStore:
     def __init__(self, path: str):
         self.path = path
-        self.log_path = f"{path}.log"
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        self._rows: dict[str, dict] = {}
-        if os.path.exists(path):
-            for row in pq.read_table(path).to_pylist():
-                self._rows[row["ingestion_id"]] = row
-        if os.path.exists(self.log_path):
-            with open(self.log_path, "r", encoding="utf-8") as f:
-                for line in f:
-                    line = line.strip()
-                    if not line:
-                        continue  # torn tail write: ignore
-                    try:
-                        row = json.loads(line)
-                    except ValueError:
-                        continue
-                    self._rows[row["ingestion_id"]] = row
-        self._log = open(self.log_path, "a", encoding="utf-8")
-        # One lock over every write: concurrent ingestions share a store,
-        # and a commit appended between compact()'s snapshot and its log
-        # truncate would otherwise be lost from disk.
-        self._lock = threading.RLock()
+        # One long-lived connection (one per commit cost ~1.2 ms against
+        # ~20 µs); concurrent ingestions share it, behind the lock.
+        self._lock = threading.Lock()
+        self._conn = sqlite3.connect(path, check_same_thread=False, isolation_level=None)
+        self._conn.row_factory = sqlite3.Row
+        self._conn.execute("PRAGMA journal_mode=WAL")
+        self._conn.execute("PRAGMA synchronous=NORMAL")
+        self._conn.execute(
+            "CREATE TABLE IF NOT EXISTS ingestion_state (ingestion_id TEXT PRIMARY KEY,"
+            " last_chunk INTEGER, total_records INTEGER, status TEXT)"
+        )
 
     # -- reads (defaults per ingestion_state_store.py:36-50) --------------
 
+    def row(self, ingestion_id: str) -> dict | None:
+        """The ingestion's row in one read, so ``last_chunk`` and
+        ``total_records`` come from the same commit; None if it has none."""
+        with self._lock:
+            r = self._conn.execute(
+                "SELECT * FROM ingestion_state WHERE ingestion_id = ?", (ingestion_id,)
+            ).fetchone()
+        return None if r is None else dict(r)
+
     def get_last_chunk(self, ingestion_id: str) -> int:
-        return self._rows.get(ingestion_id, {}).get("last_chunk", -1)
+        return (self.row(ingestion_id) or DEFAULT_ROW)["last_chunk"]
 
     def get_total_records(self, ingestion_id: str) -> int:
-        return self._rows.get(ingestion_id, {}).get("total_records", 0)
+        return (self.row(ingestion_id) or DEFAULT_ROW)["total_records"]
 
     def get_status(self, ingestion_id: str) -> str | None:
-        return self._rows.get(ingestion_id, {}).get("status")
+        return (self.row(ingestion_id) or DEFAULT_ROW)["status"]
 
     # -- writes (ACK-gated upsert, ingestion_state_store.py:52-68) --------
 
     def update_chunk(self, ingestion_id: str, chunk_number: int, total_records: int):
         """Commit progress — call ONLY after consumer ACK ("no false
         progress", reference README:471-482)."""
-        row = {
-            "ingestion_id": ingestion_id,
-            "last_chunk": int(chunk_number),
-            "total_records": int(total_records),
-            "status": STATUS_IN_PROGRESS,
-        }
         with self._lock:
-            self._rows[ingestion_id] = row
-            self._append(row)
+            self._conn.execute(
+                "INSERT OR REPLACE INTO ingestion_state VALUES (?, ?, ?, ?)",
+                (ingestion_id, int(chunk_number), int(total_records), STATUS_IN_PROGRESS),
+            )
 
     def mark_completed(self, ingestion_id: str):
         with self._lock:
-            row = self._rows.setdefault(
-                ingestion_id,
-                {
-                    "ingestion_id": ingestion_id,
-                    "last_chunk": -1,
-                    "total_records": 0,
-                    "status": STATUS_IN_PROGRESS,
-                },
+            self._conn.execute(
+                "INSERT INTO ingestion_state VALUES (?, -1, 0, ?)"
+                " ON CONFLICT (ingestion_id) DO UPDATE SET status = excluded.status",
+                (ingestion_id, STATUS_COMPLETED),
             )
-            row["status"] = STATUS_COMPLETED
-            self.compact()
-
-    def _append(self, row: dict) -> None:
-        self._log.write(json.dumps(row) + "\n")
-        self._log.flush()
-
-    def compact(self) -> None:
-        """Fold the log into the parquet snapshot (durable: fsync'd)."""
-        tmp = f"{self.path}.tmp"
-        with self._lock:
-            pq.write_table(
-                pa.Table.from_pylist(list(self._rows.values()), schema=_SCHEMA), tmp
-            )
-            with open(tmp, "rb+") as f:
-                os.fsync(f.fileno())
-            os.replace(tmp, self.path)  # atomic on POSIX
-            self._log.truncate(0)
-            self._log.seek(0)
-
-    def as_dataframe(self, spark: SparkSession) -> DataFrame:
-        self.compact()
-        return spark.read.schema(
-            "ingestion_id string, last_chunk long, total_records long, status string"
-        ).parquet(self.path)
+            self._conn.execute("PRAGMA wal_checkpoint(FULL)")
 
 
 def version_for(re_ingestion: bool) -> str:

@@ -39,15 +39,15 @@ from pyspark.sql import functions as F
 
 from .chunker import CHUNK_COL
 from .config import IngestRequest
-from .integrity import build_file_id, build_ingestion_id
 from .pipeline import (
     IngestSummary,
     _chunk_payloads,
     _chunked,
+    complete_ingestion,
     deliver_payloads,
 )
 from .sink import Transport
-from .state import IngestionStateStore, version_for
+from .state import IngestionStateStore
 
 
 def stream_ingest(
@@ -57,7 +57,6 @@ def stream_ingest(
     state: IngestionStateStore,
     transport: Transport,
     checkpoint_root: str,
-    max_files_per_trigger: int | None = None,  # set on the source, documented here
     final: bool = True,
 ) -> IngestSummary:
     """Run a streaming ingestion to exhaustion (Trigger.AvailableNow).
@@ -84,9 +83,7 @@ def stream_ingest(
     if request.chunk_size_by_records is None:
         raise ValueError("streaming mode chunks by record count")
 
-    file_id = build_file_id(request.file_path, request.file_type)
-    version = version_for(request.re_ingestion)
-    ingestion_id = build_ingestion_id(file_id, version)
+    ingestion_id = request.ingestion_id
     # ST2: identity and checkpoint share a lifecycle — a re-ingestion's
     # fresh id gets a fresh checkpoint dir, a resume reuses both.
     checkpoint = f"{checkpoint_root.rstrip('/')}/{ingestion_id}"
@@ -122,29 +119,7 @@ def stream_ingest(
         .start()
     )
     q.awaitTermination()
-
-    # K4 completion handshake, gated on consumer ACK as in batch mode.
-    last = state.get_last_chunk(ingestion_id)
-    totals = state.get_total_records(ingestion_id)
-    if final:
-        resp = transport(
-            {
-                "ingestion_id": ingestion_id,
-                "status": "COMPLETED",
-                "chunk_number": last,
-                "total_records": totals,
-            }
-        )
-        if resp.ack:
-            state.mark_completed(ingestion_id)
-
-    return IngestSummary(
-        ingestion_id=ingestion_id,
-        chunks_sent=last + 1,
-        total_records=totals,
-        last_chunk=last,
-        status=state.get_status(ingestion_id) or "IN_PROGRESS",
-    )
+    return complete_ingestion(ingestion_id, state, transport, final=final)
 
 
 # ------------------------------------------------------- event-time demo

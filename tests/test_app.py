@@ -218,3 +218,51 @@ def test_duplicate_http_dispatch_joins_running_execution(
         srv.shutdown()
         for lg in loggers:
             lg.handlers.clear()
+
+
+def test_reingestion_reply_id_is_the_committed_id(spark, tmp_path, monkeypatch):
+    """With re_ingestion=True the version is the clock: the id the HTTP
+    shell replies with is the one the pipeline commits under, so both
+    ``wait()`` and ``/api/status`` read it COMPLETED."""
+    import json
+    import logging
+    import urllib.request
+
+    from data_ingestion_pimcore_spark.http_app import start_http_app
+
+    loggers = [
+        logging.getLogger(f"data_ingestion_pimcore_spark.{k}")
+        for k in ("info", "error", "debug")
+    ]
+    for lg in loggers:
+        lg.handlers.clear()
+    monkeypatch.setenv("SPARK_GRAFT_LOG_DIR", str(tmp_path / "logs"))
+
+    v = ChunkValidator()
+    svc = _svc(spark, tmp_path, v)
+    srv, _t, port = start_http_app(svc)
+    base = f"http://127.0.0.1:{port}"
+    try:
+        req = urllib.request.Request(
+            f"{base}/api/ingest",
+            data=json.dumps(dict(_PAYLOAD, re_ingestion=True)).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req, timeout=60) as r:
+            iid = json.loads(r.read())["ingestion_id"]
+        final = svc.wait(iid, timeout=300)
+        assert final["status"] == "COMPLETED" and final["error"] is None
+        assert (final["last_chunk"], final["total_records"]) == (2, 6000)
+        with urllib.request.urlopen(f"{base}/api/status/{iid}", timeout=60) as r:
+            st = json.loads(r.read())
+        assert st == {
+            "ingestion_id": iid,
+            "status": "COMPLETED",
+            "last_chunk": 2,
+            "total_records": 6000,
+        }
+        assert v.completed == [iid]
+    finally:
+        srv.shutdown()
+        for lg in loggers:
+            lg.handlers.clear()

@@ -362,16 +362,18 @@ def test_canonical_dumps_golden_bytes():
     assert canonical_dumps({"x": None, "y": True}) == b'{"x":null,"y":true}'
 
 
-def test_state_store_wal_replay(tmp_path):
-    """Crash-recovery: commits appended to the WAL but not yet compacted
-    into the parquet snapshot must be recovered by a fresh store opened
-    on the same path (snapshot + log replay)."""
+def test_state_store_reopen_after_crash(tmp_path):
+    """Crash-recovery: commits made without a mark_completed (no WAL
+    checkpoint) are read back by a fresh store opened on the same path,
+    and the file is the reference's one four-column table."""
+    import sqlite3
+
     p = str(tmp_path / "st.parquet")
     s1 = IngestionStateStore(p)
     s1.update_chunk("ing-a", 0, 10)
     s1.update_chunk("ing-a", 1, 20)
     s1.update_chunk("ing-b", 5, 500)
-    # no compact/mark_completed — simulate a crash mid-ingestion
+    # no mark_completed — simulate a crash mid-ingestion
 
     s2 = IngestionStateStore(p)
     assert s2.get_last_chunk("ing-a") == 1
@@ -380,95 +382,130 @@ def test_state_store_wal_replay(tmp_path):
     assert s2.get_status("ing-a") == "IN_PROGRESS"
 
     s2.update_chunk("ing-a", 2, 30)
-    s2.mark_completed("ing-a")  # compacts: snapshot holds the fold
+    s2.mark_completed("ing-a")
     s3 = IngestionStateStore(p)
     assert s3.get_last_chunk("ing-a") == 2
     assert s3.get_status("ing-a") == "COMPLETED"
     assert s3.get_last_chunk("ing-b") == 5
     # unknown ingestion falls back to the reference defaults
     assert s3.get_last_chunk("nope") == -1 and s3.get_total_records("nope") == 0
+    assert s3.get_status("nope") is None and s3.row("nope") is None
+    # mark_completed on an unknown id still creates its row
+    s3.mark_completed("ing-c")
+    assert s3.row("ing-c") == {
+        "ingestion_id": "ing-c",
+        "last_chunk": -1,
+        "total_records": 0,
+        "status": "COMPLETED",
+    }
+
+    with sqlite3.connect(p) as con:
+        tables = con.execute("SELECT name FROM sqlite_master WHERE type = 'table'").fetchall()
+        cols = con.execute("PRAGMA table_info(ingestion_state)").fetchall()
+    assert tables == [("ingestion_state",)]
+    assert [(c[1], c[2], c[5]) for c in cols] == [
+        ("ingestion_id", "TEXT", 1),
+        ("last_chunk", "INTEGER", 0),
+        ("total_records", "INTEGER", 0),
+        ("status", "TEXT", 0),
+    ]
 
 
-def test_state_store_wal_torn_tail(tmp_path):
-    """A torn final WAL line (partial write at crash) is ignored; intact
-    earlier commits survive."""
-    p = str(tmp_path / "st.parquet")
-    s1 = IngestionStateStore(p)
-    s1.update_chunk("ing-a", 3, 99)
-    with open(p + ".log", "a", encoding="utf-8") as f:
-        f.write('{"ingestion_id": "ing-a", "last_chu')  # torn write
-    s2 = IngestionStateStore(p)
-    assert s2.get_last_chunk("ing-a") == 3
-    assert s2.get_total_records("ing-a") == 99
+def test_state_store_rejects_a_file_that_is_not_sqlite(tmp_path):
+    """A path holding another format (say, an old parquet snapshot)
+    raises instead of silently starting an empty store."""
+    import sqlite3
+
+    p = tmp_path / "state.parquet"
+    p.write_bytes(b"PAR1" + bytes(range(256)) * 4 + b"PAR1")
+    with pytest.raises(sqlite3.DatabaseError):
+        IngestionStateStore(str(p))
 
 
-def test_state_store_compact_keeps_concurrent_commit(tmp_path, monkeypatch):
-    """A commit from a second ingestion that arrives while another
-    ingestion's mark_completed is compacting survives on disk: it can no
-    longer be appended after the snapshot was taken and then truncated
-    away with the log."""
-    import threading
+def test_state_store_survives_sigkill(tmp_path):
+    """A child process commits N chunks and is SIGKILLed without closing
+    its store or checkpointing; reopening the path reads chunk N-1 and
+    its total."""
+    import os
+    import signal
+    import subprocess
+    import sys
 
-    import pyarrow.parquet as pq
-
-    p = str(tmp_path / "st.parquet")
-    store = IngestionStateStore(p)
-    store.update_chunk("ing-a", 0, 10)
-    real_write = pq.write_table
-    other: list[threading.Thread] = []
-
-    def write_with_commit_mid_compaction(table, where, *args, **kwargs):
-        if not other:  # the snapshot table is built; the log is not yet truncated
-            t = threading.Thread(target=store.update_chunk, args=("ing-b", 7, 70))
-            other.append(t)
-            t.start()
-            t.join(timeout=0.5)  # unlocked, the commit lands right here
-        return real_write(table, where, *args, **kwargs)
-
-    monkeypatch.setattr(pq, "write_table", write_with_commit_mid_compaction)
-    store.mark_completed("ing-a")
-    other[0].join(timeout=10)
-    assert not other[0].is_alive()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = str(tmp_path / "state.parquet")
+    n = 25
+    child = f"""
+import sys, time
+from data_ingestion_pimcore_spark.state import IngestionStateStore
+s = IngestionStateStore({p!r})
+for c in range({n}):
+    s.update_chunk("ing-a", c, (c + 1) * 7)
+print("COMMITTED", flush=True)
+time.sleep(120)
+"""
+    proc = subprocess.Popen(
+        [sys.executable, "-c", child], cwd=root, stdout=subprocess.PIPE, text=True
+    )
+    try:
+        assert proc.stdout.readline().strip() == "COMMITTED"
+        os.kill(proc.pid, signal.SIGKILL)
+        assert proc.wait(timeout=30) == -signal.SIGKILL
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait(timeout=30)
+        proc.stdout.close()
     reopened = IngestionStateStore(p)
-    assert reopened.get_status("ing-a") == "COMPLETED"
-    assert reopened.get_last_chunk("ing-b") == 7
-    assert reopened.get_total_records("ing-b") == 70
+    assert reopened.row("ing-a") == {
+        "ingestion_id": "ing-a",
+        "last_chunk": n - 1,
+        "total_records": n * 7,
+        "status": "IN_PROGRESS",
+    }
 
 
-def test_state_store_concurrent_commits_and_compactions(tmp_path):
-    """Stress: eight ingestions commit while another thread compacts in
-    a loop; after reopening, every ingestion's last commit is on disk."""
+def test_state_store_concurrent_commits_and_reads(tmp_path):
+    """Stress: eight ingestions commit while a reader thread reads their
+    rows; every row() pairs a last_chunk with its own total_records, and
+    after reopening every ingestion's last commit is on disk."""
     import sys
     import threading
 
     store = IngestionStateStore(str(tmp_path / "st.parquet"))
     n_ids, n_chunks = 8, 60
     done = threading.Event()
+    reads: list[dict] = []
 
     def commit(i):
         for c in range(n_chunks):
-            store.update_chunk(f"ing-{i}", c, c + 1)
+            store.update_chunk(f"ing-{i}", c, (c + 1) * 10)
 
-    def compact():
+    def read():
         while not done.is_set():
-            store.compact()
+            for i in range(n_ids):
+                row = store.row(f"ing-{i}")
+                if row is not None:
+                    reads.append(row)
 
     prev = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
-        compactor = threading.Thread(target=compact)
+        reader = threading.Thread(target=read)
         workers = [threading.Thread(target=commit, args=(i,)) for i in range(n_ids)]
-        compactor.start()
+        reader.start()
         for w in workers:
             w.start()
         for w in workers:
             w.join(timeout=60)
         done.set()
-        compactor.join(timeout=60)
+        reader.join(timeout=60)
     finally:
         done.set()
         sys.setswitchinterval(prev)
-    assert not compactor.is_alive() and not any(w.is_alive() for w in workers)
+    assert not reader.is_alive() and not any(w.is_alive() for w in workers)
+    assert reads
+    torn = [r for r in reads if r["total_records"] != (r["last_chunk"] + 1) * 10]
+    assert torn == []
     reopened = IngestionStateStore(str(tmp_path / "st.parquet"))
     assert [reopened.get_last_chunk(f"ing-{i}") for i in range(n_ids)] == [n_chunks - 1] * n_ids
 

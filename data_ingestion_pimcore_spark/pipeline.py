@@ -431,7 +431,7 @@ def deliver_payloads(
     transport: Transport,
     total_records: int,
     mark_last: bool,
-) -> tuple[int, int]:
+) -> int:
     """Ordered, ACK-gated emit of prepared chunk payloads (K1–K3).
 
     Sequential per contract (CV2); the expensive work already happened
@@ -439,7 +439,7 @@ def deliver_payloads(
     chunk (batch mode knows the end; streaming batches pass False and
     rely on the completion event). ``payloads`` is ``_chunk_payloads``
     output; its fragment rows are merged on the way (_merge_fragment_rows).
-    Returns (chunks_sent, total_records).
+    Returns the number of chunks sent.
 
     One loop, one chunk in flight: each chunk goes through
     ``send_chunk_with_retry`` (the ACK gate and its bounded retry), and
@@ -478,7 +478,7 @@ def deliver_payloads(
         prev = row
     if prev is not None:
         deliver(prev, is_last=mark_last)
-    return chunks_sent, total_records
+    return chunks_sent
 
 
 @dataclass
@@ -571,7 +571,7 @@ def ingest(
     # every partition's expensive work is parallel and complete by the
     # first row — the background materialization only duplicated it
     # (interleaved A/B at sf0.1: statistically flat, 5.2-5.8 s both).
-    chunks_sent, _ = deliver_payloads(
+    chunks_sent = deliver_payloads(
         payloads,
         ingestion_id,
         state,

@@ -281,11 +281,12 @@ def bench_ingest_e2e(
         assert summary.status == "COMPLETED", summary
         return dt, summary.total_records
 
-    # Service-startup warm-up (pipeline.warm_ingest): spins up the
-    # Python worker pool + Arrow paths on a 64-row ingestion, exactly
-    # what a long-running ingestion service does at boot. "cold" is
-    # then the first FULL-SIZE ingestion a warmed service receives —
-    # the production cold-request number.
+    # Session warm-up (pipeline.warm_ingest): one miniature count-mode
+    # ingestion over a 32,768-row parquet slice of lineitem, which
+    # spins up the Python workers and Arrow paths and compiles this
+    # source's codegen. The HTTP service does not run it. "cold"
+    # (ingest_e2e_cold) is then the first full-size ingestion after
+    # this warm-up.
     from data_ingestion_pimcore_spark.pipeline import warm_ingest
 
     warm_ingest(spark, like=li, like_order_cols=req.order_cols)

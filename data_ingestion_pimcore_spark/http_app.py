@@ -17,7 +17,9 @@ own thread; ingestion work itself runs on IngestionService's background
 threads (the FastAPI BackgroundTasks analogue), so the accept loop
 never blocks on Spark jobs. At scale this shell fronts the driver of a
 long-running Spark application; requests fan out as concurrent jobs
-inside one SparkSession (Spark's scheduler handles fair-sharing).
+inside one SparkSession, which schedules them FIFO (Spark's default):
+an earlier job's stages get the cores first, and a later job's tasks
+run on the cores they leave free.
 """
 
 from __future__ import annotations

@@ -9,7 +9,7 @@ Batch-mode equivalent of the reference's ``stream_and_push``
 * The resume filter (``chunk_number > last_chunk``, reference K3) is a
   DataFrame predicate above the ordering exchange: a re-run skips the
   already-ACKed chunks' Python serialize, but still scans and shuffles
-  every record (pruning below the exchange: ROADMAP Direction 2).
+  every record (pruning below the exchange: ROADMAP Direction 3).
 * Chunks serialize in executors through one serializer (``_records``
   → ``_seal``: canonical JSON + SHA-256) and one builder,
   ``_chunk_payloads``, for count mode, byte mode and streaming
@@ -554,7 +554,8 @@ def ingest(
     else:
         # K3: skip already-ACKed chunks. The predicate sits above the
         # ordering exchange, so it saves their Python serialize only;
-        # the scan and shuffle still cover every record (ROADMAP D2).
+        # the scan and shuffle still cover every record (ROADMAP
+        # Direction 3).
         pending = chunked.where(F.col(CHUNK_COL) > last_chunk)
     # Canonicalization + checksumming run IN EXECUTORS (each chunk
     # sealed in the task holding its rows), in parallel across all
@@ -622,79 +623,59 @@ def warm_ingest(
     like_order_cols: tuple[str, ...] | None = None,
     like_rows: int = 32768,
 ) -> None:
-    """One-time session warm-up: run miniature ingestions through the
-    exact plan shapes of ``ingest()`` — deterministic-pid sampling,
-    global-row-number window, Arrow ``mapInPandas`` serialization,
-    broadcast offset join, ordered ``toLocalIterator`` drain, state
-    commits — so the FIRST real ingestion does not pay Python-worker
-    pool spin-up, Arrow path initialization, and whole-stage-codegen
-    JIT on top of its own work.
+    """Session warm-up: run ONE miniature count-mode ingestion through
+    ``ingest()`` (deterministic-pid sampling, global-row-number window,
+    Arrow ``mapInPandas`` serialization, broadcast offset join, ordered
+    ``toLocalIterator`` drain, state commits), so the first full-size
+    ingestion does not pay Python-worker spin-up, Arrow initialization
+    and whole-stage-codegen compilation on top of its own work.
 
-    Sized to actually reach the JVM's hot-compile thresholds: a 64-row
-    pass loads the codegen classes but leaves every generated loop
-    interpreted, which made the first full-size ingestion ~3× steady
-    state. ~50k JVM-generated rows (`spark.range`, no driver transfer)
-    through BOTH chunk modes push the window/serialize/probe loops
-    into C2, after which the first real request runs near steady
-    state. A long-running ingestion service calls this once at boot;
-    the cost is paid off on the first request.
+    Callers: ``bench.py``'s ingest probes and perfbench's set-up, both
+    with ``like``; the HTTP service does not call it, so its first POST
+    runs cold.
 
-    ``like`` (optional) additionally warms the EXACT plan of an
-    expected source: whole-stage codegen is generated per plan schema
-    and Spark's compile cache is keyed on the generated source, so a
-    mini count-mode ingest over a ``like_rows`` parquet slice of the
-    real table lets the first full-size request reuse the compiled
-    classes instead of paying Janino + interpreter warm-up on its own
-    rows. Pass the request's ``order_cols`` via ``like_order_cols``."""
+    With ``like``, the ingest runs over a ``like_rows`` parquet slice of
+    the expected source, ordered by ``like_order_cols`` (default: its
+    first column). Whole-stage codegen is generated per plan schema and
+    Spark's compile cache is keyed on the generated source, so the first
+    full-size request over that source reuses the compiled classes. The
+    slice is written, not ``like.limit()``: a bare limit is re-evaluated
+    in each of the ingest's sampling, count and drain jobs, and nothing
+    guarantees it returns the same rows each time. Without ``like``, the
+    ingest runs over a synthetic 24,576-row ``spark.range`` frame.
+
+    Not warmed: byte-mode plan shapes (``chunk_size_by_memory``), and
+    any source schema other than ``like``'s. Measured with ``like``, a
+    synthetic ingest on top cost more warm-up than it saved on the first
+    request."""
     import shutil
     import tempfile
 
     from .sink import ChunkValidator
     from .state import IngestionStateStore
 
-    df = (
-        spark.range(24576)
-        .withColumn("k", F.col("id"))
-        .withColumn("v", F.concat(F.lit("w"), F.col("id").cast("string")))
-        .withColumn("x", F.col("id") * 1.5)
-        .drop("id")
-    )
-    count_req = IngestRequest(
-        file_path="warmup://count",
-        file_type="parquet",
-        chunk_size_by_records=4000,
-        re_ingestion=True,
-        order_cols=("k", "v"),
-    )
-    byte_req = IngestRequest(
-        file_path="warmup://bytes",
-        file_type="parquet",
-        chunk_size_by_memory=256 * 1024,
-        re_ingestion=True,
-        order_cols=("k", "v"),
-    )
     tmp_dir = tempfile.mkdtemp(prefix="warm_ingest_")
     try:
-        for i, req in enumerate((count_req, byte_req)):
-            state = IngestionStateStore(f"{tmp_dir}/state_{i}.parquet")
-            ingest(spark, req, df, state, ChunkValidator())
         if like is None:
-            return
-        mini_path = f"{tmp_dir}/slice.parquet"
-        like.limit(like_rows).write.mode("overwrite").parquet(mini_path)
-        like_req = IngestRequest(
-            file_path=mini_path,
+            path, order_cols = "warmup://count", ("k", "v")
+            df = spark.range(24576).select(
+                F.col("id").alias("k"),
+                F.concat(F.lit("w"), F.col("id").cast("string")).alias("v"),
+                (F.col("id") * 1.5).alias("x"),
+            )
+        else:
+            path = f"{tmp_dir}/slice.parquet"
+            order_cols = tuple(like_order_cols or like.columns[:1])
+            like.limit(like_rows).write.mode("overwrite").parquet(path)
+            df = spark.read.parquet(path)
+        request = IngestRequest(
+            file_path=path,
             file_type="parquet",
             chunk_size_by_records=4000,
             re_ingestion=True,
-            order_cols=tuple(like_order_cols or like.columns[:1]),
+            order_cols=order_cols,
         )
-        ingest(
-            spark,
-            like_req,
-            spark.read.parquet(mini_path),
-            IngestionStateStore(f"{tmp_dir}/state_like.parquet"),
-            ChunkValidator(),
-        )
+        state = IngestionStateStore(f"{tmp_dir}/state.db")
+        ingest(spark, request, df, state, ChunkValidator())
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)

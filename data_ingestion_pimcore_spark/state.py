@@ -9,6 +9,11 @@ status None (`:36-50`). The path names the database file whatever its
 suffix; a file there that is not a SQLite database raises
 ``sqlite3.DatabaseError`` instead of starting empty.
 
+A second table, ``stream_batch(ingestion_id TEXT PRIMARY KEY, batch_id
+INTEGER, base_chunk INTEGER)``, holds each streaming ingestion's latest
+micro-batch and its first chunk number, so a replayed batch keeps its
+numbering (``stream_batch_base``).
+
 Durability: in WAL mode with ``synchronous=NORMAL`` each ACK-gated
 commit survives a crash of the process; ``mark_completed`` checkpoints
 the WAL into the database file, fsync'd, before it returns. A commit
@@ -51,6 +56,10 @@ class IngestionStateStore:
             "CREATE TABLE IF NOT EXISTS ingestion_state (ingestion_id TEXT PRIMARY KEY,"
             " last_chunk INTEGER, total_records INTEGER, status TEXT)"
         )
+        self._conn.execute(
+            "CREATE TABLE IF NOT EXISTS stream_batch (ingestion_id TEXT PRIMARY KEY,"
+            " batch_id INTEGER, base_chunk INTEGER)"
+        )
 
     # -- reads (defaults per ingestion_state_store.py:36-50) --------------
 
@@ -82,6 +91,31 @@ class IngestionStateStore:
                 "INSERT OR REPLACE INTO ingestion_state VALUES (?, ?, ?, ?)",
                 (ingestion_id, int(chunk_number), int(total_records), STATUS_IN_PROGRESS),
             )
+
+    def stream_batch_base(self, ingestion_id: str, batch_id: int) -> int:
+        """First chunk number of streaming micro-batch ``batch_id``.
+        The first call for a batch fixes it at ``last_chunk + 1`` and
+        persists it before any of the batch's sends; a replay of the
+        batch reads it back. One row per ingestion: Spark replays only
+        its latest batch, and starts a batch only after committing the
+        one before."""
+        with self._lock:
+            r = self._conn.execute(
+                "SELECT batch_id, base_chunk FROM stream_batch WHERE ingestion_id = ?",
+                (ingestion_id,),
+            ).fetchone()
+            if r is not None and r["batch_id"] == batch_id:
+                return r["base_chunk"]
+            last = self._conn.execute(
+                "SELECT last_chunk FROM ingestion_state WHERE ingestion_id = ?",
+                (ingestion_id,),
+            ).fetchone()
+            base = (DEFAULT_ROW["last_chunk"] if last is None else last[0]) + 1
+            self._conn.execute(
+                "INSERT OR REPLACE INTO stream_batch VALUES (?, ?, ?)",
+                (ingestion_id, int(batch_id), base),
+            )
+        return base
 
     def mark_completed(self, ingestion_id: str):
         with self._lock:

@@ -11,14 +11,19 @@ Streaming's model, so this is the idiomatic mapping:
 |                                   | explicit state table (K2)          |
 | chunk loop                        | ``foreachBatch`` micro-batches     |
 | resume after crash                | checkpoint replays only the        |
-|                                   | uncommitted batch; CV1 idempotency |
-|                                   | absorbs the replay (at-least-once  |
-|                                   | + idempotent consumer = chunk-     |
-|                                   | exactly-once)                      |
+|                                   | uncommitted batch, renumbered from |
+|                                   | its stored first chunk; its ACKed  |
+|                                   | chunks are skipped (K3), and CV1   |
+|                                   | absorbs the one unACKed resend     |
 | re_ingestion=true fresh identity  | fresh checkpointLocation (ST2)     |
 
 Chunk numbers continue across micro-batches from the state table's
-``last_chunk`` — sequential because micro-batches are sequential.
+``last_chunk`` — sequential because micro-batches are sequential. A
+batch's first chunk number is persisted under its ``batch_id`` before
+its first send, so a replayed batch (after a NACKed chunk or a crash
+before Spark's commit-log write) reproduces its numbering: it reads the
+same offsets, hence the same rows, and ``_chunked`` is deterministic on
+``order_cols``.
 Chunk size is an upper bound: a batch's final partial chunk is flushed
 at the batch boundary (the reference flushes at file end the same
 way). ``is_last`` is unknowable mid-stream, so chunks carry False and
@@ -47,7 +52,7 @@ from .pipeline import (
     deliver_payloads,
 )
 from .sink import Transport
-from .state import IngestionStateStore
+from .state import DEFAULT_ROW, IngestionStateStore
 
 
 def stream_ingest(
@@ -91,25 +96,29 @@ def stream_ingest(
     record_cols = stream_df.columns
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Chunk numbering continues from the ACKed high-water mark. On
-        # a checkpoint replay of an already-delivered batch the same
-        # numbers are NOT reproduced (last_chunk moved) — but replayed
-        # sends were already ACKed, so CV1 dedup on chunk_id never
-        # fires for fresh numbers; delivery stays exactly-once per
-        # chunk because only unACKed work reaches the wire. The state
-        # read is the serialization point; micro-batches are sequential.
-        base = state.get_last_chunk(ingestion_id) + 1
-        totals = state.get_total_records(ingestion_id)
+        # The batch's first chunk number is fixed on its first attempt
+        # and read back on a replay, so replayed rows keep their chunk
+        # numbers; its ACKed chunks are skipped like batch-mode K3.
+        # Micro-batches are sequential, so the state reads see every
+        # earlier batch's commits.
+        base = state.stream_batch_base(ingestion_id, batch_id)
+        done = state.row(ingestion_id) or DEFAULT_ROW
         # The batch builder over 0-based chunks, then shifted by
         # ``base``: the shift keeps the ascending drain layout, so the
         # payloads need no re-sort.
         stats: dict = {}
         chunked = _chunked(batch_df, request, order_cols, stats_out=stats)
+        pending = chunked.where(F.col(CHUNK_COL) > done["last_chunk"] - base)
         payloads = _chunk_payloads(
-            chunked, record_cols, stats["n_chunks"]
+            pending, record_cols, stats["n_chunks"]
         ).withColumn(CHUNK_COL, F.col(CHUNK_COL) + F.lit(base).cast("long"))
         deliver_payloads(
-            payloads, ingestion_id, state, transport, totals, mark_last=False
+            payloads,
+            ingestion_id,
+            state,
+            transport,
+            done["total_records"],
+            mark_last=False,
         )
 
     q = (
@@ -120,109 +129,3 @@ def stream_ingest(
     )
     q.awaitTermination()
     return complete_ingestion(ingestion_id, state, transport, final=final)
-
-
-# ------------------------------------------------------- event-time demo
-
-
-def streaming_tumbling_counts(
-    spark: SparkSession,
-    events_dir: str,
-    schema,
-    checkpoint: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Genuine ``readStream`` event-time aggregation over an events
-    landing directory (JSONL), AvailableNow → in-memory sink.
-
-    The watermark bounds state: rows later than ``watermark`` behind
-    the max seen event time are dropped and their windows finalized —
-    the standard late-data contract the batch ``ts_tumbling_window``
-    op mirrors 1:1 (same grouping expression), so batch results
-    validate the streaming plan.
-    """
-    stream = spark.readStream.schema(schema).json(events_dir)
-    agg = (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-    name = "tumbling_counts"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_stateful_running_counts(
-    spark: SparkSession,
-    events_dir: str,
-    schema,
-    checkpoint: str,
-):
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    a per-key running total that survives across micro-batches (and,
-    via the checkpoint's state store, across restarts) — the streaming
-    generalization of the reference's resumable ``total_records``
-    accumulator (A1, `app/services/json_reader.py:52,94`; store
-    `app/services/ingestion_state_store.py:44-50`), keyed by
-    ``event_type`` instead of ingestion_id.
-
-    Each micro-batch emits ``(event_type, batch_rows, n_events_total)``
-    in update mode; state is one long per key, so state-store size is
-    O(distinct keys) regardless of stream length.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = spark.readStream.schema(schema).json(events_dir)
-
-    def update(key, pdfs, state: GroupState):
-        rows = 0
-        for pdf in pdfs:
-            rows += len(pdf)
-        total = (state.get[0] if state.exists else 0) + rows
-        state.update((total,))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "batch_rows": [rows],
-                "n_events_total": [total],
-            }
-        )
-
-    out: list = []
-    q = (
-        stream.groupBy("event_type")
-        .applyInPandasWithState(
-            update,
-            outputStructType="event_type string, batch_rows long, n_events_total long",
-            stateStructType="total long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        # foreachBatch (not the memory sink) so the query can RECOVER
-        # from its checkpoint — restart continues from persisted state.
-        .writeStream.foreachBatch(lambda bdf, _id: out.extend(bdf.collect()))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.createDataFrame(
-        out, "event_type string, batch_rows long, n_events_total long"
-    )

@@ -125,3 +125,42 @@ def test_seeds_and_alternating_order(monkeypatch, capsys):
     assert "4 pairs, seeds 901-904" in out
     assert "`wall_s` 3 [3, 3] → 2.9 [2.9, 2.9] s (-3.3%, change wins 4/4): gain" in out
     assert "`setup_s`: no values (A 0, B 0)" in out
+
+
+def test_cold_context_lines_come_from_perfbench_stderr():
+    def err(warm, op1):
+        return (
+            "Picked up JAVA_TOOL_OPTIONS: -XX:-UsePerfData\n"
+            f"[perfbench] setup: 6.95 s, then warm-up {warm} s\n"
+            f"[perfbench] op 1: wall {op1} s, first chunk 1.847 s, resume 2.020 s\n"
+            "[perfbench] op 2: wall 2.512 s, first chunk 0.901 s, resume 1.013 s\n"
+        )
+
+    out = "workload x\n" + _result()
+    def side(name, logged):
+        return [ab.parse(name, i, 0, out, err(w, o)) for i, (w, o) in enumerate(logged)]
+
+    a = side("A", [(14.0, 4.5), (15.0, 4.7), (13.0, 4.6)])
+    b = side("B", [(10.5, 5.0), (10.0, 4.9), (11.0, 5.1)])
+    assert a[0].cold == {"warm-up": 14.0, "op 1 wall": 4.5}
+    # core_queries logs no warm-up; a failed run contributes nothing
+    core_log = "[perfbench] setup: 4.68 s\n[perfbench] op 1: wall 29.190 s\n"
+    core = ab.parse("A", 9, 0, out, core_log)
+    assert core.cold == {"op 1 wall": 29.19}
+    bad = ab.parse("B", 9, 137, out, err(99.0, 99.0))
+    assert bad.why and bad.cold == {}
+    text, clean = ab.report("a", "b", "w", [0, 1, 2], 8, [METRICS["wall_s"]], list(zip(a, b)))
+    assert clean
+    lines = text.splitlines()
+    context = [ln for ln in lines if ln.startswith("  context ")]
+    assert context == [
+        "  context A warm-up: 14 [13.5, 14.5] s over 3 runs",
+        "  context A op 1 wall: 4.6 [4.55, 4.65] s over 3 runs",
+        "  context B warm-up: 10.5 [10.25, 10.75] s over 3 runs",
+        "  context B op 1 wall: 5 [4.95, 5.05] s over 3 runs",
+    ]
+    # the context lines follow every verdict line and carry no verdict
+    assert lines.index(context[0]) > max(i for i, ln in enumerate(lines) if "change wins" in ln)
+    text, _ = ab.report("a", "b", "w", [9], 8, [METRICS["wall_s"]], [(core, ab.parse("B", 9, 0, out, core_log))])
+    assert "  context A warm-up: no values" in text
+    assert "  context B op 1 wall: 29.19 [29.19, 29.19] s over 1 runs" in text

@@ -402,12 +402,18 @@ def test_state_store_reopen_after_crash(tmp_path):
     with sqlite3.connect(p) as con:
         tables = con.execute("SELECT name FROM sqlite_master WHERE type = 'table'").fetchall()
         cols = con.execute("PRAGMA table_info(ingestion_state)").fetchall()
-    assert tables == [("ingestion_state",)]
+        batch_cols = con.execute("PRAGMA table_info(stream_batch)").fetchall()
+    assert tables == [("ingestion_state",), ("stream_batch",)]
     assert [(c[1], c[2], c[5]) for c in cols] == [
         ("ingestion_id", "TEXT", 1),
         ("last_chunk", "INTEGER", 0),
         ("total_records", "INTEGER", 0),
         ("status", "TEXT", 0),
+    ]
+    assert [(c[1], c[2], c[5]) for c in batch_cols] == [
+        ("ingestion_id", "TEXT", 1),
+        ("batch_id", "INTEGER", 0),
+        ("base_chunk", "INTEGER", 0),
     ]
 
 
@@ -510,12 +516,46 @@ def test_state_store_concurrent_commits_and_reads(tmp_path):
     assert [reopened.get_last_chunk(f"ing-{i}") for i in range(n_ids)] == [n_chunks - 1] * n_ids
 
 
-def test_warm_ingest_runs(spark):
-    """Service-startup warm-up completes end-to-end (miniature
-    ingestion through all ingest() plan shapes)."""
-    from data_ingestion_pimcore_spark.pipeline import warm_ingest
+def test_warm_ingest_runs(spark, tmp_path, monkeypatch):
+    """The warm-up is one miniature count-mode ``ingest`` per call: over
+    the synthetic frame without ``like``, over a parquet slice of
+    ``like`` with it. It completes and leaves no temp dir behind."""
+    import os
 
-    warm_ingest(spark)
+    from data_ingestion_pimcore_spark import pipeline
+
+    calls = []
+    real_ingest = pipeline.ingest
+
+    def counting(spark_, request, df, state, transport):
+        summary = real_ingest(spark_, request, df, state, transport)
+        calls.append((request, os.path.dirname(state.path), summary))
+        return summary
+
+    monkeypatch.setattr(pipeline, "ingest", counting)
+
+    pipeline.warm_ingest(spark)
+    assert len(calls) == 1
+    request, tmp_dir, summary = calls[0]
+    assert request.chunk_size_by_records == 4000 and request.chunk_size_by_memory is None
+    assert summary.status == "COMPLETED" and summary.total_records == 24576
+    assert os.path.basename(tmp_dir).startswith("warm_ingest_")
+    assert not os.path.exists(tmp_dir)
+
+    like_path = str(tmp_path / "like.parquet")
+    spark.range(3000).select(
+        F.col("id").alias("product_id"), F.concat(F.lit("SKU-"), F.col("id")).alias("sku")
+    ).write.parquet(like_path)
+    calls.clear()
+    pipeline.warm_ingest(
+        spark, like=spark.read.parquet(like_path), like_order_cols=("product_id",)
+    )
+    assert len(calls) == 1
+    request, tmp_dir, summary = calls[0]
+    assert request.file_path == f"{tmp_dir}/slice.parquet"
+    assert request.order_cols == ("product_id",) and request.chunk_size_by_memory is None
+    assert summary.status == "COMPLETED" and summary.total_records == 3000
+    assert not os.path.exists(tmp_dir)
 
 
 def test_fused_payloads_equal_groupby_payloads(spark):

@@ -520,8 +520,9 @@ def test_small_ingest_ordering_exchange_is_aqe_coalesced(spark, tmp_path, monkey
     """A source with no parquet footers (an in-memory frame) gets its
     ordering-stage width from AQE, not from the shuffle-partition conf:
     in the executed payload plan, the __pid exchange is read through a
-    coalesced AQEShuffleRead under MapInPandas. The input is
-    warm_ingest's byte-mode shape: 24,576 rows, 256 KiB chunks."""
+    coalesced AQEShuffleRead under MapInPandas. The input is a
+    24,576-row ``spark.range`` frame (long key, string, double) in
+    256 KiB byte-mode chunks."""
     from data_ingestion_pimcore_spark import pipeline
     from data_ingestion_pimcore_spark.config import IngestRequest
     from data_ingestion_pimcore_spark.sink import ChunkValidator

@@ -1,7 +1,7 @@
 """Structured Streaming surface: checkpointed foreachBatch ingestion
-(chunk numbering continuous across micro-batches and across restarts)
-and a genuine readStream event-time aggregation validated against its
-batch twin.
+(chunk numbering continuous across micro-batches and across restarts, a
+replayed micro-batch delivering each record once) and readStream
+event-time watermarks.
 """
 
 from __future__ import annotations
@@ -13,12 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_pimcore_spark.config import IngestRequest
-from data_ingestion_pimcore_spark.sink import ChunkValidator
+from data_ingestion_pimcore_spark.sink import AckResponse, ChunkValidator
 from data_ingestion_pimcore_spark.state import IngestionStateStore
-from data_ingestion_pimcore_spark.streaming import (
-    stream_ingest,
-    streaming_tumbling_counts,
-)
+from data_ingestion_pimcore_spark.streaming import stream_ingest
 
 SCHEMA = "product_id long, sku string, qty long"
 
@@ -116,6 +113,147 @@ def test_stream_ingest_resume_only_new_files(spark, tmp_path):
     assert s2.status == "COMPLETED" and v2.completed == [s2.ingestion_id]
 
 
+def _delivered_once(v, n):
+    """``v`` processed chunks 0..k in order, holding records 1..n once."""
+    got = [r["product_id"] for recs in v.received_records for r in recs]
+    assert got == list(range(1, n + 1))
+    assert v.received_chunks == list(range(len(v.received_chunks)))
+
+
+def test_stream_replayed_batch_resends_no_acked_record(spark, tmp_path):
+    """A micro-batch that fails after some of its chunks were ACKed is
+    replayed by Spark from the checkpoint. The replay keeps the batch's
+    chunk numbers and sends only the chunks the consumer has not ACKed,
+    so each record is delivered once and the totals count it once."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_file(landing, "f1.jsonl", 1, 25)
+    state = IngestionStateStore(str(tmp_path / "state.db"))
+    ckpt = str(tmp_path / "ckpt")
+    v = ChunkValidator()  # one live consumer across both runs
+
+    def nack_chunk_1(payload):
+        if payload.get("chunk_number") == 1 and payload.get("status") != "COMPLETED":
+            return AckResponse(False, payload["ingestion_id"], 1, "SIMULATED_FAILURE")
+        return v(payload)
+
+    def run(transport):
+        stream = spark.readStream.schema(SCHEMA).json(str(landing))
+        return stream_ingest(spark, _req(landing), stream, state, transport, ckpt)
+
+    with pytest.raises(Exception, match="rejected after"):
+        run(nack_chunk_1)
+    iid = _req(landing).ingestion_id
+    assert state.get_last_chunk(iid) == 0 and state.get_total_records(iid) == 10
+    assert v.received_chunks == [0]
+
+    s = run(v)
+    assert s.status == "COMPLETED" and s.total_records == 25 and s.last_chunk == 2
+    assert v.received_chunks == [0, 1, 2]
+    _delivered_once(v, 25)
+    assert v.completed == [iid]
+
+
+def test_stream_sigkill_after_ack_before_batch_commit(spark, tmp_path):
+    """A separate producer process is SIGKILLed after it committed the
+    ACK of its micro-batch's last chunk, before Spark wrote the batch to
+    its commit log. A restart on the same checkpoint replays the batch;
+    the consumer, alive across both producers, sees every chunk once."""
+    import json as _json
+    import os
+    import signal
+    import subprocess
+    import sys as _sys
+    import threading
+    import time as _time
+    from http.server import BaseHTTPRequestHandler, HTTPServer
+
+    from data_ingestion_pimcore_spark.sink import HttpTransport
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_file(landing, "f1.jsonl", 1, 25)
+    v = ChunkValidator()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):
+            resp = v(_json.loads(self.rfile.read(int(self.headers["Content-Length"]))))
+            out = _json.dumps(
+                {"ack": resp.ack, "ingestion_id": resp.ingestion_id,
+                 "chunk_number": resp.chunk_number, "error": resp.error}
+            ).encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(out)))
+            self.end_headers()
+            self.wfile.write(out)
+
+        def log_message(self, *a):
+            pass
+
+    srv = HTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    url = f"http://127.0.0.1:{srv.server_port}/callback"
+    state_path, ckpt = str(tmp_path / "state.db"), str(tmp_path / "ckpt")
+    marker = tmp_path / "committed-last-chunk"
+
+    # The child's store parks the process right after the batch's last
+    # chunk (chunk 2: 25 rows at 10 per chunk) is committed.
+    producer_script = f"""
+import sys, time
+sys.path.insert(0, {repr(os.getcwd())})
+from data_ingestion_pimcore_spark.session import get_spark
+from data_ingestion_pimcore_spark.config import IngestRequest
+from data_ingestion_pimcore_spark.sink import HttpTransport
+from data_ingestion_pimcore_spark.state import IngestionStateStore
+from data_ingestion_pimcore_spark.streaming import stream_ingest
+
+class Store(IngestionStateStore):
+    def update_chunk(self, ingestion_id, chunk_number, total_records):
+        super().update_chunk(ingestion_id, chunk_number, total_records)
+        if chunk_number == 2:
+            open({repr(str(marker))}, "w").close()
+            time.sleep(600)
+
+spark = get_spark("stream-crash-producer")
+spark.sparkContext.setLogLevel("ERROR")
+req = IngestRequest(file_path={repr(str(landing))}, file_type="jsonl",
+                    chunk_size_by_records=10, order_cols=("product_id",))
+stream = spark.readStream.schema({repr(SCHEMA)}).json({repr(str(landing))})
+stream_ingest(spark, req, stream, Store({repr(state_path)}),
+              HttpTransport({repr(url)}), {repr(ckpt)})
+"""
+    proc = subprocess.Popen(
+        [_sys.executable, "-c", producer_script],
+        env=dict(os.environ, SPARK_GRAFT_CPUS="2"),
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.DEVNULL,
+    )
+    try:
+        deadline = _time.monotonic() + 180
+        while not marker.exists():
+            assert proc.poll() is None, "producer exited before committing chunk 2"
+            assert _time.monotonic() < deadline, "producer never committed chunk 2"
+            _time.sleep(0.2)
+        os.kill(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=30)
+
+        state = IngestionStateStore(state_path)
+        iid = _req(landing).ingestion_id
+        assert state.get_last_chunk(iid) == 2 and state.get_total_records(iid) == 25
+        assert v.completed == []
+
+        stream = spark.readStream.schema(SCHEMA).json(str(landing))
+        s = stream_ingest(spark, _req(landing), stream, state, HttpTransport(url), ckpt)
+        assert s.status == "COMPLETED" and s.total_records == 25 and s.last_chunk == 2
+        assert v.received_chunks == [0, 1, 2]
+        _delivered_once(v, 25)
+        assert v.completed == [iid]
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+        srv.shutdown()
+
+
 def test_stream_ingest_rejects_batch_df(spark, tmp_path):
     df = spark.range(5)
     with pytest.raises(ValueError, match="streaming DataFrame"):
@@ -127,68 +265,6 @@ def test_stream_ingest_rejects_batch_df(spark, tmp_path):
             ChunkValidator(),
             str(tmp_path / "ckpt"),
         )
-
-
-def test_streaming_tumbling_matches_batch(spark, tmp_path):
-    landing = tmp_path / "events"
-    landing.mkdir()
-    rows = [
-        {"event_time": f"2026-01-01T{h:02d}:{m:02d}:00", "event_type": t}
-        for h in range(4)
-        for m, t in [(5, "click"), (25, "click"), (45, "view")]
-    ]
-    (landing / "e.jsonl").write_text("\n".join(json.dumps(r) for r in rows))
-    schema = "event_time timestamp, event_type string"
-
-    got = streaming_tumbling_counts(
-        spark, str(landing), schema, str(tmp_path / "ckpt")
-    )
-    batch = (
-        spark.read.schema(schema)
-        .json(str(landing))
-        .groupBy(F.window("event_time", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    key = lambda r: (str(r["window_start"]), r["event_type"])
-    assert sorted(map(key, got.collect())) == sorted(map(key, batch.collect()))
-    assert got.count() == 8  # 4 hours × 2 types
-
-
-def test_streaming_stateful_running_counts(spark, tmp_path):
-    """applyInPandasWithState keeps per-key totals across micro-batches
-    AND across query restarts (state store in the checkpoint)."""
-    from data_ingestion_pimcore_spark.streaming import (
-        streaming_stateful_running_counts,
-    )
-
-    landing = tmp_path / "events"
-    landing.mkdir()
-    schema = "event_time timestamp, event_type string"
-
-    def write(name, rows):
-        (landing / name).write_text(
-            "\n".join(
-                json.dumps({"event_time": f"2026-01-01T00:{m:02d}:00", "event_type": t})
-                for m, t in rows
-            )
-        )
-
-    write("e1.jsonl", [(1, "click"), (2, "click"), (3, "view")])
-    got1 = streaming_stateful_running_counts(
-        spark, str(landing), schema, str(tmp_path / "ck")
-    ).collect()
-    t1 = {r["event_type"]: r["n_events_total"] for r in got1}
-    assert t1 == {"click": 2, "view": 1}
-
-    # restart with the same checkpoint after more data lands: totals
-    # continue from persisted state, only the new rows are processed
-    write("e2.jsonl", [(4, "click"), (5, "scroll")])
-    got2 = streaming_stateful_running_counts(
-        spark, str(landing), schema, str(tmp_path / "ck")
-    ).collect()
-    t2 = {r["event_type"]: (r["batch_rows"], r["n_events_total"]) for r in got2}
-    assert t2 == {"click": (1, 3), "scroll": (1, 1)}
 
 
 def test_watermark_drops_late_data(spark, tmp_path):

@@ -17,6 +17,11 @@ the change's median is worse than the parent's by more than the metric's
 bound, else ``inside noise``. A run that exits non-zero, reports
 ``correct: false`` or ends without a JSON result line is listed and counted
 as failed. The exit code is 0 only if no run failed and no metric is worse.
+
+Two context lines per side, which carry no verdict, give the cold cost
+that a set-up hides: the median [Q1, Q3] of the warm-up seconds and of
+operation 1's wall seconds, read from perfbench's log on stderr
+(``setup: X s, then warm-up Y s`` and ``op 1: wall Z s``).
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ import argparse
 import io
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -43,6 +49,14 @@ class Run:
     result: dict | None = None
     why: str = ""
     metrics: dict = field(default_factory=dict)
+    cold: dict = field(default_factory=dict)
+
+
+# Context read from perfbench's log: name -> pattern with the seconds as group 1.
+COLD = {
+    "warm-up": re.compile(r"\bsetup: [\d.]+ s, then warm-up ([\d.]+) s"),
+    "op 1 wall": re.compile(r"\bop 1(?: traced)?: wall ([\d.]+) s"),
+}
 
 
 def export(rev: str, dest: str) -> None:
@@ -74,8 +88,12 @@ def parse(side: str, seed: int, code: int, out: str, err: str) -> Run:
         run.why = f"correct: {json.dumps(run.result.get('correct'))}"
     elif code != 0 and not run.why:
         run.why = f"exit {code}"
+    for name, pattern in COLD.items():
+        m = pattern.search(err)
+        if m:
+            run.cold[name] = float(m.group(1))
     if run.why:
-        run.metrics = {}
+        run.metrics, run.cold = {}, {}
         tail = err.strip().splitlines()
         run.why += f" ({tail[-1][:160]})" if tail else ""
     return run
@@ -145,6 +163,15 @@ def report(rev_a: str, rev_b: str, workload: str, seeds: list[int], seconds: flo
             f"  {side}: {sum(1 for r in failed if r.side == side)}/{len(pairs)} runs failed, "
             f"{bad}/{ops} operations failed"
         )
+    for side in ("A", "B"):
+        for name in COLD:
+            xs = [r.cold[name] for r in runs if r.side == side and name in r.cold]
+            if xs:
+                q1, q2, q3 = quartiles(xs)
+                shown = f"{fmt(q2)} [{fmt(q1)}, {fmt(q3)}] s over {len(xs)} runs"
+            else:
+                shown = "no values"
+            out.append(f"  context {side} {name}: {shown}")
     for r in failed:
         out.append(f"  FAILED {r.side} seed {r.seed} exit {r.code}: {r.why}")
     return "\n".join(out), not failed and "worse" not in verdicts

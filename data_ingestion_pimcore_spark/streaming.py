@@ -11,10 +11,11 @@ Streaming's model, so this is the idiomatic mapping:
 |                                   | explicit state table (K2)          |
 | chunk loop                        | ``foreachBatch`` micro-batches     |
 | resume after crash                | checkpoint replays only the        |
-|                                   | uncommitted batch, renumbered from |
-|                                   | its stored first chunk; its ACKed  |
-|                                   | chunks are skipped (K3), and CV1   |
-|                                   | absorbs the one unACKed resend     |
+|                                   | uncommitted batch, numbered as     |
+|                                   | before from its stored first       |
+|                                   | chunk; its ACKed chunks are        |
+|                                   | skipped (K3), and CV1 absorbs the  |
+|                                   | one unACKed resend                 |
 | re_ingestion=true fresh identity  | fresh checkpointLocation (ST2)     |
 
 Chunk numbers continue across micro-batches from the state table's
@@ -102,13 +103,13 @@ def stream_ingest(
         # Micro-batches are sequential, so the state reads see every
         # earlier batch's commits.
         base = state.stream_batch_base(ingestion_id, batch_id)
-        done = state.row(ingestion_id) or DEFAULT_ROW
+        acked = state.row(ingestion_id) or DEFAULT_ROW
         # The batch builder over 0-based chunks, then shifted by
         # ``base``: the shift keeps the ascending drain layout, so the
         # payloads need no re-sort.
         stats: dict = {}
         chunked = _chunked(batch_df, request, order_cols, stats_out=stats)
-        pending = chunked.where(F.col(CHUNK_COL) > done["last_chunk"] - base)
+        pending = chunked.where(F.col(CHUNK_COL) > acked["last_chunk"] - base)
         payloads = _chunk_payloads(
             pending, record_cols, stats["n_chunks"]
         ).withColumn(CHUNK_COL, F.col(CHUNK_COL) + F.lit(base).cast("long"))
@@ -117,7 +118,7 @@ def stream_ingest(
             ingestion_id,
             state,
             transport,
-            done["total_records"],
+            acked["total_records"],
             mark_last=False,
         )
 

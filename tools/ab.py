@@ -88,14 +88,15 @@ def parse(side: str, seed: int, code: int, out: str, err: str) -> Run:
         run.why = f"correct: {json.dumps(run.result.get('correct'))}"
     elif code != 0 and not run.why:
         run.why = f"exit {code}"
+    if run.why:
+        run.metrics = {}
+        tail = err.strip().splitlines()
+        run.why += f" ({tail[-1][:160]})" if tail else ""
+        return run
     for name, pattern in COLD.items():
         m = pattern.search(err)
         if m:
             run.cold[name] = float(m.group(1))
-    if run.why:
-        run.metrics, run.cold = {}, {}
-        tail = err.strip().splitlines()
-        run.why += f" ({tail[-1][:160]})" if tail else ""
     return run
 
 
